@@ -219,21 +219,6 @@ def spread_small_input(df: DataFrame, max_parts: int = 32) -> DataFrame:
     return df
 
 
-def shingle_sets_arrow(text_col, shingle_n: int = 3) -> Column:
-    """Arrow-batched distinct word-n-gram shingle sets (array<string>) from
-    raw text — `_shingle_sets` (JVM-parity semantics, tested) without the
-    minhash signature work. Use instead of the interpreted `shingles()`
-    HOF chain on hot paths: Spark higher-order functions are not codegen
-    and get re-evaluated per consuming expression (CLAUDE.md)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("array<string>")
-    def kernel(texts: pd.Series) -> pd.Series:
-        return pd.Series(_shingle_sets(texts, shingle_n))
-
-    return kernel(text_col)
-
-
 def shingle_hash_sets_arrow(text_col, shingle_n: int = 3) -> Column:
     """Distinct md5-lower-64 hashes of each row's shingle set
     (array<long>): the postings-index currency for exact-Jaccard joins —

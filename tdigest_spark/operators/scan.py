@@ -95,11 +95,6 @@ def parquet_splits(
     return splits
 
 
-# one extractor for both build paths: the list-flatten fast-path guard
-# must never diverge between them (they are asserted bit-identical)
-_column_values_arrow = _column_values
-
-
 def scan_partials_rdd(
     spark,
     paths: list[str],
@@ -160,7 +155,9 @@ def scan_partials_rdd(
             sort_cache: dict[str, np.ndarray] = {}
             agg_cache: dict[str, tuple[np.ndarray, np.ndarray]] = {}
             for c in cols:
-                cache[c] = _column_values_arrow(tbl.column(c))
+                # the DataFrame path's extractor: the two builds are
+                # asserted bit-identical, so null handling must not diverge
+                cache[c] = _column_values(tbl.column(c))
                 values_seen += cache[c].shape[0]
                 # token columns are duplicate-heavy: ONE sort per column
                 # feeds everything — unique+counts fall out linearly for
@@ -259,24 +256,38 @@ def build_sketch_grouped_scan(
     spec: SketchSpec,
     target_rows_per_split: int = 2_000_000,
     partitions: int | None = None,
-) -> dict[str, Any]:
-    """Grouped sketch build on the scan-in-worker fast path: each task
-    reads its row-group splits with pyarrow, partitions rows by the group
-    key with one vectorized argsort per split, and keeps ONE sketch per
-    key for the whole partition. Only (key, state) pairs return to the
-    driver — #partitions x #keys x O(state) bytes, never rows. Intended
-    for low-cardinality keys (source, language, shard); high-cardinality
-    grouping belongs to aggregate.build_sketch_grouped's shuffle.
+) -> dict[str | None, Any]:
+    """Grouped sketch build on the scan-in-worker fast path, in ONE Spark
+    stage.
 
-    Returns {key: sketch object} (keys stringified)."""
+    Each task reads its row-group splits with pyarrow, dictionary-encodes
+    the key column, stable-argsorts the integer codes and reorders the value
+    column once with Arrow ``take``; each key's rows are then one contiguous
+    slice, extracted with the shared ``_column_values`` (null elements and
+    null list rows contribute nothing) and fed to the spec's update. The
+    task keeps ONE sketch per key for its whole partition and returns only
+    (key, state) pairs — #partitions x #keys x O(state) bytes, never rows.
+
+    The pairs are collected and folded per key on the driver with
+    ``fold_states`` (byte-sorted, so the result is independent of task
+    order). There is no shuffle: a reduce stage would pay Spark's fixed
+    Python-stage cost only to fold a handful of small states. That makes
+    this function for LOW-cardinality keys only (source, language, shard):
+    the driver holds every (key, state) pair at once. High-cardinality
+    grouping belongs to ``aggregate.build_sketch_grouped``, whose per-key
+    merge runs in a shuffle.
+
+    Returns {key: sketch object}: keys are stringified, and a null key is
+    its own group under the key ``None`` (as ``build_sketch_grouped``
+    keeps it)."""
     paths = _normalize_paths(paths)
     splits = parquet_splits(paths, target_rows_per_split)
 
-    def run_partition(it: Iterator[_Split]) -> Iterator[tuple[str, bytes]]:
+    def run_partition(it: Iterator[_Split]) -> Iterator[tuple[str | None, bytes]]:
+        import pyarrow as pa
         import pyarrow.parquet as pq
 
-        sks: dict[str, Any] = {}
-        is_list = None
+        sks: dict[str | None, Any] = {}
         for sp in it:
             tbl = pq.ParquetFile(sp.path).read_row_groups(
                 list(sp.row_groups), columns=[group_col, column],
@@ -284,56 +295,36 @@ def build_sketch_grouped_scan(
             )
             if tbl.num_rows == 0:
                 continue  # empty part file -> empty split (valid input)
-            keys = np.asarray(
-                tbl.column(group_col).combine_chunks().to_pylist(), dtype=object
-            )
-            col = tbl.column(column).combine_chunks()
-            import pyarrow as pa
-
-            if is_list is None:
-                is_list = pa.types.is_list(col.type) or pa.types.is_large_list(
-                    col.type
-                )
-            order = np.argsort(keys, kind="stable")
-            sorted_keys = keys[order]
+            keys = tbl.column(group_col).combine_chunks()
+            if pa.types.is_dictionary(keys.type):  # e.g. written from categoricals
+                keys = keys.dictionary_decode()
+            # null_encoding="encode": a null key gets its own dictionary
+            # entry, so it groups like any other key
+            enc = keys.dictionary_encode(null_encoding="encode")
+            codes = enc.indices.to_numpy(zero_copy_only=False)
+            # stable: each key's rows keep their file order, so its sketch
+            # sees the same value sequence as a plain per-key scan
+            order = np.argsort(codes, kind="stable")
+            sorted_codes = codes[order]
             bounds = np.flatnonzero(
-                np.r_[True, sorted_keys[1:] != sorted_keys[:-1]]
+                np.r_[True, sorted_codes[1:] != sorted_codes[:-1]]
             )
-            bounds = np.r_[bounds, len(sorted_keys)]
-            if is_list:
-                offs = col.offsets.to_numpy(zero_copy_only=False)
-                flat = col.flatten().to_numpy(zero_copy_only=False)
-            else:
-                vals_all = col.to_numpy(zero_copy_only=False)
-            for i in range(len(bounds) - 1):
-                rows_idx = order[bounds[i] : bounds[i + 1]]
-                key = str(sorted_keys[bounds[i]])
-                if is_list:
-                    # gather each row's token slice (vectorized concat of
-                    # per-row ranges via repeat/cumsum arithmetic)
-                    starts = offs[rows_idx]
-                    lens = offs[rows_idx + 1] - starts
-                    total = int(lens.sum())
-                    if total == 0:
-                        vals = np.empty(0, dtype=flat.dtype)
-                    else:
-                        idx = np.repeat(starts + lens - lens.cumsum(), lens) + np.arange(
-                            total
-                        )
-                        vals = flat[idx]
-                else:
-                    vals = vals_all[rows_idx]
+            bounds = np.r_[bounds, len(sorted_codes)]
+            grouped = tbl.column(column).combine_chunks().take(order)
+            dict_keys = enc.dictionary.to_pylist()
+            for lo, hi in zip(bounds[:-1].tolist(), bounds[1:].tolist()):
+                k = dict_keys[sorted_codes[lo]]
+                key = None if k is None else str(k)
                 if key not in sks:
                     sks[key] = spec.make()
-                if vals.shape[0]:
-                    if spec.update_agg is not None and vals.dtype.kind in "iub":
-                        _, agg = sorted_and_agg(vals, True, False)
-                        if agg is not None:
-                            spec.update_agg(sks[key], *agg)
-                        else:
-                            spec.update(sks[key], vals)
-                    else:
-                        spec.update(sks[key], vals)
+                vals = _column_values(grouped.slice(lo, hi - lo))
+                if not vals.shape[0]:
+                    continue
+                if spec.update_agg is not None and vals.dtype.kind in "iub":
+                    _, agg = sorted_and_agg(vals, True, False)
+                    spec.update_agg(sks[key], *agg)
+                else:
+                    spec.update(sks[key], vals)
         for key, sk in sks.items():
             yield (key, sk.to_bytes())
 
@@ -343,12 +334,9 @@ def build_sketch_grouped_scan(
     pairs = (
         sc.parallelize(splits, max(partitions, 1))
         .mapPartitions(run_partition)
-        .groupByKey()  # #keys x #partitions tiny state rows
-        .mapValues(
-            lambda states: fold_states(sorted(states), spec)
-        )
         .collect()
     )
-    return {k: spec.from_bytes(v) for k, v in pairs}
-
-
+    by_key: dict[str | None, list[bytes]] = {}
+    for key, state in pairs:
+        by_key.setdefault(key, []).append(state)
+    return {k: spec.from_bytes(fold_states(v, spec)) for k, v in by_key.items()}

@@ -147,8 +147,8 @@ class CheckpointedBuild:
                 key, splits = batch
                 t0 = time.perf_counter()
                 # reuse the scan kernel loop by inlining its per-split work
+                from ..operators.aggregate import _column_values
                 from ..operators.aggregate import sorted_and_agg as _sorted_and_agg
-                from ..operators.scan import _column_values_arrow
 
                 import pyarrow.parquet as _pq
 
@@ -164,7 +164,7 @@ class CheckpointedBuild:
                         list(sp.row_groups), columns=cols, use_threads=False
                     )
                     rows += tbl.num_rows
-                    cache = {c: _column_values_arrow(tbl.column(c)) for c in cols}
+                    cache = {c: _column_values(tbl.column(c)) for c in cols}
                     values_seen += sum(v.shape[0] for v in cache.values())
                     # same shared one-prep-per-column dispatch as the scan
                     # kernel (sorted_and_agg: bincount or sort once, feed

@@ -74,6 +74,9 @@ def encode_deletion_vector(positions) -> bytes:
     """Serialize row positions as the DV blob: magic, varint cardinality,
     then delta-varints over the sorted deduplicated positions."""
     pos = sorted(set(int(p) for p in positions))
+    # the varint loop below only terminates for n >= 0 (n >>= 7 stays -1)
+    if pos and pos[0] < 0:
+        raise ValueError(f"deletion-vector position must be >= 0, got {pos[0]}")
     out = [_DV_MAGIC]
 
     def varint(n: int) -> bytes:

@@ -11,6 +11,10 @@ Spec semantics under test (Apache Iceberg v3 table spec, public docs):
   to the consolidated output and is dropped from the live set.
 """
 
+import subprocess
+import sys
+from pathlib import Path
+
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
@@ -31,6 +35,25 @@ def test_dv_codec_roundtrip():
         assert decode_deletion_vector(encode_deletion_vector(pos)) == sorted(
             set(pos)
         )
+
+
+def test_dv_codec_rejects_negative_position():
+    """A negative position used to spin forever in the varint loop
+    (n >>= 7 never reaches 0 for n < 0); run the call in a child process
+    so a missing guard fails on the timeout instead of hanging the suite."""
+    code = (
+        "from tdigest_spark.sources.iceberg import encode_deletion_vector\n"
+        "encode_deletion_vector([3, -1])\n"
+    )
+    res = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=Path(__file__).resolve().parents[1],
+        capture_output=True,
+        text=True,
+        timeout=60,
+    )
+    assert res.returncode != 0
+    assert "ValueError" in res.stderr and ">= 0" in res.stderr
 
 
 def test_dv_codec_strict_magic():

@@ -6,8 +6,14 @@ with the same deterministic sorted binary-tree merge, so serialized states
 must match byte-for-byte.
 """
 
+import hashlib
+import time
+
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.dataset as pads
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -20,6 +26,7 @@ from tdigest_spark.operators.aggregate import (
     build_sketches,
 )
 from tdigest_spark.operators.scan import (
+    build_sketch_grouped_scan,
     build_sketches_scan,
     parquet_splits,
     scan_partials_rdd,
@@ -204,3 +211,144 @@ def test_grouped_scan_matches_grouped_dataframe_path(spark, seq_path):
     hll_df = build_sketch_grouped(df, ["source"], "n_tok", HLL_INTS(12))
     for r in hll_df.collect():
         assert hll_scan[r["source"]].to_bytes() == bytes(r["state"])
+
+
+# sha256 of every per-key state from build_sketch_grouped_scan on the
+# scantest_n20000 fixture (target_rows_per_split=2_500, partitions=4),
+# recorded from the groupByKey implementation before the grouped build
+# became one stage: the driver fold must reproduce it byte for byte.
+GROUPED_STATE_SHA256 = {
+    ("tokens", "td"): {
+        "books": "08b0eb536f69f070223916a39791343f544c64572cdecab0351ce783d7c6fd2f",
+        "code": "59ae01153bff7aaa73976b4fc59f62bab53fde20ffc81fadcf21f5aa1e5be4f1",
+        "rare": "0bab469afe8d53bb05cb1cafbe27084844a70e51ebc2d297d767ae37d24b93f3",
+        "web": "7ba3c4f19306bf77bca6cd2a9167b29a4bfe24627f8265914ca0ae627ed529f3",
+        "wiki": "6bb2be796256fb14e0967092682246154299ae47d9b57fe83dd1b9dcc397d117",
+    },
+    ("n_tok", "td"): {
+        "books": "5132a6359f0c90f1b4efd08fc0113fb3feea9a4d5381e6bce5056eacaf6fbdad",
+        "code": "11fab2fe09fb600bc8ec434e6bb31915409eefe00536fb11e7258d7c88dccef5",
+        "rare": "b956be4a4c0237278de4ff6e249a009d7b543bd66e6e67c29f03024cd9f617ed",
+        "web": "3a0242f7a23e6f513bb0da45997193bb158e587fac9b9fcb7311fe115d32fc98",
+        "wiki": "ca78d0e0a630461d23b1e9ab7aaf83efef1bddb9bbeaf09427909505dc76a20b",
+    },
+    ("n_tok", "hll"): {
+        "books": "c49ed4baf707d26602ec74e6fab9da127d8745c130bad3c76a922d77705b05ab",
+        "code": "d3e721f396a3c5e1f04c6f42e95a2617aaef48931fb5fcb0ed0893a12df9e38c",
+        "rare": "5cabdb462dd192a6ada256c046bbcda6b269551b2436510d8bebd14fe36b415a",
+        "web": "f86f461b500805a81cb0c2b50696dc2ce9ac76b157adabd58c59ec71f49d5069",
+        "wiki": "4fbf1321356a38caa0d5707eb8a1b9636dbe36a487343ae23f1d40f080abd7e4",
+    },
+}
+GROUPED_SPECS = {"td": TDIGEST(0.01), "hll": HLL_INTS(12)}
+
+
+@pytest.mark.parametrize("column,spec_name", sorted(GROUPED_STATE_SHA256))
+def test_grouped_scan_states_pinned(spark, seq_path, column, spec_name):
+    got = build_sketch_grouped_scan(
+        spark, str(seq_path), "source", column, GROUPED_SPECS[spec_name],
+        target_rows_per_split=2_500, partitions=4,
+    )
+    assert {
+        k: hashlib.sha256(v.to_bytes()).hexdigest() for k, v in got.items()
+    } == GROUPED_STATE_SHA256[(column, spec_name)]
+
+
+def test_grouped_scan_is_one_stage(spark, seq_path):
+    """The per-key fold runs on the driver: one call is one job of one
+    stage, so a reduce-side shuffle cannot come back unnoticed."""
+    sc = spark.sparkContext
+    group = "grouped-scan-stage-count"
+    sc.setJobGroup(group, "one grouped scan build")
+    try:
+        build_sketch_grouped_scan(
+            spark, str(seq_path), "source", "tokens", TDIGEST(0.01),
+            target_rows_per_split=2_500, partitions=4,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    # the status store is fed by the async listener bus: wait for the job
+    # to be recorded as finished before reading its stages
+    deadline = time.monotonic() + 30
+    while True:
+        jobs = tracker.getJobIdsForGroup(group)
+        infos = [tracker.getJobInfo(j) for j in jobs]
+        if jobs and all(i is not None and i.status == "SUCCEEDED" for i in infos):
+            break
+        assert time.monotonic() < deadline, (jobs, infos)
+        time.sleep(0.1)
+    assert len(jobs) == 1
+    assert len(infos[0].stageIds) == 1
+
+
+def _null_table(tmp_path):
+    """Two files: null group keys, null list rows, null list elements and
+    null scalars, spread so every key meets several splits. The second
+    file stores its keys dictionary-encoded (as pandas categoricals write
+    them)."""
+    root = tmp_path / "nulls"
+    root.mkdir()
+    rng = np.random.default_rng(7)
+    for f in range(2):
+        n = 400
+        src = rng.choice(["a", "b", None], size=n).tolist()
+        tokens, n_tok = [], []
+        for i in range(n):
+            if i % 17 == 0:
+                tokens.append(None)
+            else:
+                row = rng.integers(0, 50, size=int(rng.integers(0, 6))).tolist()
+                if i % 5 == 0:
+                    row.append(None)
+                tokens.append(row)
+            n_tok.append(None if i % 11 == 0 else int(rng.integers(0, 100)))
+        pq.write_table(
+            pa.table(
+                {
+                    "source": (
+                        pa.array(src, pa.string()).dictionary_encode()
+                        if f
+                        else pa.array(src, pa.string())
+                    ),
+                    "tokens": pa.array(tokens, pa.list_(pa.int32())),
+                    "n_tok": pa.array(n_tok, pa.int32()),
+                }
+            ),
+            root / f"part-{f}.parquet",
+            row_group_size=100,
+        )
+    return root
+
+
+def test_grouped_scan_null_keys_and_values(spark, tmp_path):
+    """A null key is its own group under ``None``; null list rows and null
+    elements contribute nothing. Per key, the grouped build equals the
+    plain scan build filtered to that key, byte for byte (same splits, same
+    partitions, same per-split update sequence)."""
+    root = _null_table(tmp_path)
+    tbl = pq.read_table(root)
+    for column in ("tokens", "n_tok"):
+        got = build_sketch_grouped_scan(
+            spark, str(root), "source", column, TDIGEST(0.01),
+            target_rows_per_split=100, partitions=3,
+        )
+        assert set(got) == {"a", "b", None}
+        for key, sk in got.items():
+            mask = (
+                tbl["source"].is_null()
+                if key is None
+                else pc.equal(tbl["source"], key)
+            )
+            col = tbl.filter(mask)[column]
+            if column == "tokens":
+                col = pc.list_flatten(col)
+            assert int(sk.n) == len(col) - col.null_count, (column, key)
+            field = pads.field("source")
+            ref = build_sketches_scan(
+                spark, str(root), {"td": (column, TDIGEST(0.01))},
+                target_rows_per_split=100, partitions=3,
+                filter_expr=field.is_null() if key is None else field == key,
+            )["td"]
+            assert sk.to_bytes() == ref.to_bytes(), (column, key)
