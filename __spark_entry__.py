@@ -18935,7 +18935,7 @@ def oracle_sql() -> dict[str, str]:
         "doc_zipf_slope": """
             WITH words AS (
               SELECT UNNEST(regexp_split_to_array(TRIM(LOWER(text)),
-                                                  '\s+')) AS w
+                                                  '\\s+')) AS w
               FROM documents WHERE TRIM(text) <> ''
             ), freq AS (
               SELECT w, CAST(COUNT(*) AS BIGINT) AS c FROM words
@@ -18964,7 +18964,7 @@ def oracle_sql() -> dict[str, str]:
             WITH words AS (
               SELECT doc_id,
                      UNNEST(regexp_split_to_array(TRIM(LOWER(text)),
-                                                  '\s+')) AS w
+                                                  '\\s+')) AS w
               FROM documents
             ), words2 AS (SELECT * FROM words WHERE w <> ''),
             dl AS (SELECT doc_id, COUNT(*) AS dl FROM words2

@@ -60,6 +60,7 @@ __all__ = [
     "merge_partials",
     "fold_states",
     "sorted_and_agg",
+    "ingest_table",
     "tree_merge_states",
 ]
 
@@ -328,16 +329,52 @@ def sorted_and_agg(
     return sv, ((uv, uc) if want_agg else None)
 
 
+def ingest_table(
+    sks: dict[str, Any],
+    sketches: dict[str, tuple[str, SketchSpec]],
+    tbl: pa.Table | pa.RecordBatch,
+) -> int:
+    """The one per-batch ingest kernel behind every build front end
+    (``partials_df``, the scan path, checkpointed builds, the grouped scan
+    build): update each sketch ``sks[name]`` in place from one Arrow table
+    or batch; returns the number of values extracted.
+
+    Each column is extracted once (``_column_values``) and each integer
+    column is sorted or counted once (``sorted_and_agg``) for every sketch
+    on it. A sketch then takes the cheapest form its spec has:
+    ``update_agg`` (unique values, counts), else ``update_sorted`` (the
+    shared sorted array), else ``update`` (raw values)."""
+    cols = sorted({c for c, _ in sketches.values()})
+    vals = {c: _column_values(tbl.column(c)) for c in cols}
+    prep: dict[str, tuple] = {}
+    for c, v in vals.items():
+        if v.dtype.kind in "iub" and v.shape[0]:
+            on_c = [spec for col, spec in sketches.values() if col == c]
+            prep[c] = sorted_and_agg(
+                v,
+                any(spec.update_agg is not None for spec in on_c),
+                any(spec.update_sorted is not None for spec in on_c),
+            )
+    for n, (c, spec) in sketches.items():
+        if not vals[c].shape[0]:
+            continue
+        sv, agg = prep.get(c, (None, None))
+        if spec.update_agg is not None and agg is not None:
+            spec.update_agg(sks[n], *agg)
+        elif spec.update_sorted is not None and sv is not None:
+            spec.update_sorted(sks[n], sv)
+        else:
+            spec.update(sks[n], vals[c])
+    return sum(v.shape[0] for v in vals.values())
+
+
 def partials_df(df: DataFrame, sketches: dict[str, tuple[str, SketchSpec]]) -> DataFrame:
     """Phase 1: one row per input partition with a binary state per sketch
     plus lineage metrics (rows / values seen). Single pass over the data for
-    all sketches (shared scan + shared Arrow transfer); integer columns are
-    sorted at most once per batch and shared across sketches (see
-    operators/scan.py for the same dispatch on the scan path)."""
+    all sketches (shared scan + shared Arrow transfer); every Arrow batch
+    goes through ``ingest_table``, the kernel the scan path uses too."""
     cols = sorted({c for c, _ in sketches.values()})
     names = list(sketches.keys())
-    specs = {n: spec for n, (_, spec) in sketches.items()}
-    col_of = {n: c for n, (c, _) in sketches.items()}
     sel = df.select(*cols)
 
     out_fields = [pa.field("rows", pa.int64()), pa.field("values_seen", pa.int64())]
@@ -345,49 +382,11 @@ def partials_df(df: DataFrame, sketches: dict[str, tuple[str, SketchSpec]]) -> D
     out_schema = pa.schema(out_fields)
 
     def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        sks = {n: specs[n].make() for n in names}
-        rows = 0
-        values_seen = 0
+        sks = {n: spec.make() for n, (_, spec) in sketches.items()}
+        rows = values_seen = 0
         for batch in batches:
             rows += batch.num_rows
-            cache: dict[str, np.ndarray] = {}
-            for n in names:
-                c = col_of[n]
-                if c not in cache:
-                    cache[c] = _column_values(batch.column(batch.schema.get_field_index(c)))
-            sort_cache: dict[str, np.ndarray] = {}
-            agg_cache: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-            for c, vals in cache.items():
-                if vals.dtype.kind not in "iub" or not vals.shape[0]:
-                    continue
-                wa = any(
-                    specs[n].update_agg is not None
-                    for n in names
-                    if col_of[n] == c
-                )
-                ws = any(
-                    specs[n].update_sorted is not None
-                    for n in names
-                    if col_of[n] == c
-                )
-                sv, agg = sorted_and_agg(vals, wa, ws)
-                if sv is not None:
-                    sort_cache[c] = sv
-                if agg is not None:
-                    agg_cache[c] = agg
-            for n in names:
-                c = col_of[n]
-                vals = cache[c]
-                if not vals.shape[0]:
-                    continue
-                if specs[n].update_agg is not None and c in agg_cache:
-                    uv, uc = agg_cache[c]
-                    specs[n].update_agg(sks[n], uv, uc)
-                elif specs[n].update_sorted is not None and c in sort_cache:
-                    specs[n].update_sorted(sks[n], sort_cache[c])
-                else:
-                    specs[n].update(sks[n], vals)
-            values_seen += sum(v.shape[0] for v in cache.values())
+            values_seen += ingest_table(sks, sketches, batch)
         arrays = [
             pa.array([rows], pa.int64()),
             pa.array([values_seen], pa.int64()),
@@ -511,68 +510,30 @@ def build_weighted_digest_grouped(
     rows never shuffle, so weighted quantile monitoring composes with the
     grouped shape at 100 TB (exchange = #partitions x #keys x state size).
 
-    Returns DataFrame[group_cols..., state binary, rows long]; states
+    Returns DataFrame[group_cols..., state binary, rows long] — ``rows``
+    counts the (value, weight) pairs with both sides non-null; states
     deserialize with ``TDigest.from_bytes``."""
     import pandas as pd
 
-    from ..sketch.tdigest import TDigest
-
-    spec = _mk_tdigest(delta)
-    sel = df.select(*group_cols, value_col, weight_col)
-    part_schema = (
-        ", ".join(
-            f"{c} {df.schema[c].dataType.simpleString()}" for c in group_cols
+    def push(sk: Any, sub: "pd.DataFrame") -> int:
+        # value/weight nulls must drop JOINTLY (same rule as the global
+        # weighted_digest_partials) or the arrays misalign
+        v = pd.to_numeric(sub[value_col], errors="coerce").to_numpy(
+            np.float64, copy=False
         )
-        + ", state binary, rows long"
+        w = pd.to_numeric(sub[weight_col], errors="coerce").to_numpy(
+            np.float64, copy=False
+        )
+        keep = ~(np.isnan(v) | np.isnan(w))
+        if not keep.all():
+            v, w = v[keep], w[keep]
+        if v.shape[0]:
+            sk.push(v, w)
+        return v.shape[0]
+
+    return _grouped_states(
+        df, group_cols, [value_col, weight_col], _mk_tdigest(delta), push
     )
-
-    def partial(pdfs: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        acc: dict[tuple, Any] = {}
-        counts: dict[tuple, int] = {}
-        for pdf in pdfs:
-            for kr, sub in pdf.groupby(group_cols, sort=False, dropna=False):
-                if not isinstance(kr, tuple):
-                    kr = (kr,)
-                # value/weight nulls must drop JOINTLY (same rule as the
-                # global weighted_digest_partials) or the arrays misalign
-                v = pd.to_numeric(sub[value_col], errors="coerce").to_numpy(
-                    np.float64, copy=False
-                )
-                w = pd.to_numeric(sub[weight_col], errors="coerce").to_numpy(
-                    np.float64, copy=False
-                )
-                keep = ~(np.isnan(v) | np.isnan(w))
-                if not keep.all():
-                    v, w = v[keep], w[keep]
-                if kr not in acc:
-                    acc[kr] = TDigest(delta)
-                    counts[kr] = 0
-                if v.shape[0]:
-                    acc[kr].push(v, w)
-                    counts[kr] += v.shape[0]
-        if acc:
-            ks = list(acc.keys())
-            out = {
-                c: [
-                    None if (k[i] is None or k[i] != k[i]) else k[i]
-                    for k in ks
-                ]
-                for i, c in enumerate(group_cols)
-            }
-            out["state"] = [acc[k].to_bytes() for k in ks]
-            out["rows"] = [counts[k] for k in ks]
-            yield pd.DataFrame(out)
-
-    parts = sel.mapInPandas(partial, part_schema)
-
-    def final_merge(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        merged = fold_states([bytes(b) for b in pdf["state"]], spec)
-        out = {c: [pdf[c].iloc[0]] for c in group_cols}
-        out["state"] = [merged]
-        out["rows"] = [int(pdf["rows"].sum())]
-        return pd.DataFrame(out)
-
-    return parts.groupBy(*group_cols).applyInPandas(final_merge, part_schema)
 
 
 def tree_merge_states(
@@ -622,30 +583,33 @@ def tree_merge_states(
     return out
 
 
-def build_sketch_grouped(
+def _grouped_states(
     df: DataFrame,
     group_cols: list[str],
-    column: str,
+    value_cols: list[str],
     spec: SketchSpec,
+    ingest: Callable[[Any, Any], int],
 ) -> DataFrame:
-    """Grouped two-phase aggregate: per-(partition, key) partial states built
-    vectorized, then only the tiny states shuffle to a per-key merge
-    (``groupBy(keys).applyInPandas``). Raw rows never shuffle — at 100 TB the
-    exchange moves #partitions × #keys × O(16 KB), not the data.
+    """The grouped two-phase skeleton shared by ``build_sketch_grouped``
+    and ``build_weighted_digest_grouped``: a mapInPandas pass keeps one
+    ``spec`` sketch per (partition, key), fed by ``ingest(sketch, sub)``
+    for each key's pandas sub-frame of a batch, which returns the rows it
+    counts; then ``groupBy(keys).applyInPandas`` folds each key's states
+    with ``fold_states``. Raw rows never shuffle — at 100 TB the exchange
+    moves #partitions × #keys × O(16 KB), not the data.
 
     Returns DataFrame[group_cols..., state binary, rows long] — group keys
     keep their NATIVE Spark types (round 1 stringified them, losing key
     types on output)."""
     import pandas as pd
 
-    sel = df.select(*group_cols, column)
+    sel = df.select(*group_cols, *value_cols)
     part_schema = (
         ", ".join(
             f"{c} {df.schema[c].dataType.simpleString()}" for c in group_cols
         )
         + ", state binary, rows long"
     )
-    is_list = df.schema[column].dataType.typeName() == "array"
 
     def partial(pdfs: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         # sketches keyed by group tuple, accumulated across all batches of
@@ -658,28 +622,10 @@ def build_sketch_grouped(
             for kr, sub in pdf.groupby(group_cols, sort=False, dropna=False):
                 if not isinstance(kr, tuple):
                     kr = (kr,)
-                if is_list:
-                    arrs = [
-                        a for a in sub[column].to_numpy() if a is not None
-                    ]
-                    vals = np.concatenate(arrs) if arrs else np.empty(0)
-                else:
-                    vals = sub[column].to_numpy()
-                    if vals.dtype.kind == "f":
-                        # nullable numerics arrive as float64 + NaN; the
-                        # batch path drops nulls (_column_values) — the
-                        # grouped path must match or results diverge
-                        vals = vals[~np.isnan(vals)]
-                    elif vals.dtype == object:
-                        vals = np.asarray(
-                            [v for v in vals if v is not None], dtype=object
-                        )
                 if kr not in acc:
                     acc[kr] = spec.make()
                     counts[kr] = 0
-                if vals.shape[0]:
-                    spec.update(acc[kr], vals)
-                counts[kr] += len(sub)
+                counts[kr] += ingest(acc[kr], sub)
         if acc:
             ks = list(acc.keys())
             out = {
@@ -709,6 +655,40 @@ def build_sketch_grouped(
         return pd.DataFrame(out)
 
     return parts.groupBy(*group_cols).applyInPandas(final_merge, part_schema)
+
+
+def build_sketch_grouped(
+    df: DataFrame,
+    group_cols: list[str],
+    column: str,
+    spec: SketchSpec,
+) -> DataFrame:
+    """Grouped two-phase aggregate (see ``_grouped_states``): one sketch
+    per key, built per (partition, key) from vectorized pandas groups, then
+    only the tiny states shuffle to a per-key merge.
+
+    Returns DataFrame[group_cols..., state binary, rows long] — ``rows``
+    counts every row of the key, null values included."""
+    is_list = df.schema[column].dataType.typeName() == "array"
+
+    def update(sk: Any, sub: "pd.DataFrame") -> int:
+        if is_list:
+            arrs = [a for a in sub[column].to_numpy() if a is not None]
+            vals = np.concatenate(arrs) if arrs else np.empty(0)
+        else:
+            vals = sub[column].to_numpy()
+            if vals.dtype.kind == "f":
+                # nullable numerics arrive as float64 + NaN; the batch path
+                # drops nulls (_column_values) — the grouped path must
+                # match or results diverge
+                vals = vals[~np.isnan(vals)]
+            elif vals.dtype == object:
+                vals = np.asarray([v for v in vals if v is not None], dtype=object)
+        if vals.shape[0]:
+            spec.update(sk, vals)
+        return len(sub)
+
+    return _grouped_states(df, group_cols, [column], spec, update)
 
 
 def _mk_bottomk(k: int = 1024, strings: bool = False):

@@ -17,6 +17,10 @@ the vectorized sketch kernels. No JVM row materialization, no shuffle of raw
 data — the only traffic is #splits x O(16 KB) serialized sketch states plus
 per-split lineage metrics (per BASELINE.json north_rule).
 
+Every split goes through the single batch-ingest kernel
+``aggregate.ingest_table`` — the same kernel that ``aggregate.partials_df``
+runs on each Arrow batch and ``plans.checkpoint`` runs through
+``_ingest_splits``; the front ends differ only in how Arrow data arrives.
 The general DataFrame path (``aggregate.partials_df``) remains the right
 choice when the input is already a transformed DataFrame; this module is the
 performance path for sketching columns straight off a parquet/Iceberg table.
@@ -25,18 +29,12 @@ performance path for sketching columns straight off a parquet/Iceberg table.
 from __future__ import annotations
 
 import time
-from dataclasses import dataclass
-from typing import Any, Iterator
+from dataclasses import dataclass, replace
+from typing import Any, Iterable, Iterator
 
 import numpy as np
 
-from .aggregate import (
-    SketchSpec,
-    _column_values,
-    fold_states,
-    merge_partials,
-    sorted_and_agg,
-)
+from .aggregate import SketchSpec, fold_states, ingest_table, merge_partials
 
 __all__ = [
     "parquet_splits",
@@ -95,6 +93,70 @@ def parquet_splits(
     return splits
 
 
+def _read_split(sp: _Split, cols: list[str], filter_expr: Any | None = None):
+    """One split's columns as an Arrow table; ``filter_expr`` (a
+    ``pyarrow.dataset`` expression) prunes row groups by their stats and
+    filters rows while decoding."""
+    if filter_expr is not None:
+        import pyarrow.dataset as pads
+
+        frag = list(pads.dataset(sp.path, format="parquet").get_fragments())[0]
+        # dataset-level split: take only this split's row groups
+        return frag.subset(row_group_ids=list(sp.row_groups)).to_table(
+            columns=cols, filter=filter_expr, use_threads=False
+        )
+    import pyarrow.parquet as pq
+
+    # use_threads=False: each of the ~cores concurrent worker processes
+    # gets a cores-sized Arrow CPU pool by default — cores^2 runnable
+    # threads; measured 4-14x slower than single-threaded decode per task
+    # at local[32]
+    return pq.ParquetFile(sp.path).read_row_groups(
+        list(sp.row_groups), columns=cols, use_threads=False
+    )
+
+
+def _ingest_splits(
+    splits: Iterable[_Split],
+    sketches: dict[str, tuple[str, SketchSpec]],
+    filter_expr: Any | None = None,
+) -> dict:
+    """Stream splits through ``aggregate.ingest_table`` into ONE state per
+    sketch: the split loop of both the scan path and checkpointed builds.
+
+    Returns the partial row: ``rows``, ``values_seen``, ``n_splits``,
+    ``wall_ms``, per-split ``lineage`` (path, row groups, rows, wall_ms)
+    and a serialized ``state_<name>`` per sketch."""
+    cols = sorted({c for c, _ in sketches.values()})
+    sks = {n: spec.make() for n, (_, spec) in sketches.items()}
+    rows = values_seen = 0
+    lineage: list[dict] = []
+    t_part = time.perf_counter()
+    for sp in splits:
+        t0 = time.perf_counter()
+        tbl = _read_split(sp, cols, filter_expr)
+        values_seen += ingest_table(sks, sketches, tbl)
+        rows += tbl.num_rows
+        lineage.append(
+            {
+                "path": sp.path,
+                "row_groups": list(sp.row_groups),
+                "rows": tbl.num_rows,
+                "wall_ms": (time.perf_counter() - t0) * 1000.0,
+            }
+        )
+    out = {
+        "rows": rows,
+        "values_seen": values_seen,
+        "n_splits": len(lineage),
+        "wall_ms": (time.perf_counter() - t_part) * 1000.0,
+        "lineage": lineage,
+    }
+    for n, sk in sks.items():
+        out[f"state_{n}"] = sk.to_bytes()
+    return out
+
+
 def scan_partials_rdd(
     spark,
     paths: list[str],
@@ -103,118 +165,25 @@ def scan_partials_rdd(
     filter_expr: Any | None = None,
     partitions: int | None = None,
 ):
-    """RDD of per-partition partial rows: dicts with serialized states +
-    per-split lineage.
+    """RDD of per-partition partial rows (see ``_ingest_splits``): dicts
+    with serialized states + per-split lineage.
 
     Each Spark partition holds several splits (default 4 x cores waves for
-    balance); the task streams every split through the kernels and emits ONE
+    balance); the task streams every split through the kernel and emits ONE
     merged state set, so collected/shuffled bytes are O(partitions x
     state_size) regardless of split count — the CMS matrix (the largest
-    state) would otherwise dominate the fan-in.
+    state) would otherwise dominate the fan-in. A partition without splits
+    emits nothing.
 
     ``filter_expr`` is a ``pyarrow.dataset`` expression pushed down into the
     parquet read (row-group stats pruning + decode-time filtering).
     """
     splits = parquet_splits(paths, target_rows_per_split)
-    names = list(sketches.keys())
-    specs = {n: spec for n, (_, spec) in sketches.items()}
-    col_of = {n: c for n, (c, _) in sketches.items()}
-    cols = sorted({c for c, _ in sketches.values()})
 
     def run_partition(it: Iterator[_Split]) -> Iterator[dict]:
-        import pyarrow.dataset as pads
-        import pyarrow.parquet as pq
-
-        sks = {n: specs[n].make() for n in names}
-        rows = 0
-        values_seen = 0
-        lineage: list[dict] = []
-        t_part = time.perf_counter()
-        for sp in it:
-            t0 = time.perf_counter()
-            sp_rows = 0
-            if filter_expr is not None:
-                frag = pads.dataset(sp.path, format="parquet")
-                # dataset-level split: take only this split's row groups
-                frag = list(frag.get_fragments())[0].subset(
-                    row_group_ids=list(sp.row_groups)
-                )
-                tbl = frag.to_table(
-                    columns=cols, filter=filter_expr, use_threads=False
-                )
-            else:
-                # use_threads=False: each of the ~cores concurrent worker
-                # processes gets a cores-sized Arrow CPU pool by default —
-                # cores^2 runnable threads; measured 4-14x slower than
-                # single-threaded decode per task at local[32]
-                tbl = pq.ParquetFile(sp.path).read_row_groups(
-                    list(sp.row_groups), columns=cols, use_threads=False
-                )
-            sp_rows += tbl.num_rows
-            cache: dict[str, np.ndarray] = {}
-            sort_cache: dict[str, np.ndarray] = {}
-            agg_cache: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-            for c in cols:
-                # the DataFrame path's extractor: the two builds are
-                # asserted bit-identical, so null handling must not diverge
-                cache[c] = _column_values(tbl.column(c))
-                values_seen += cache[c].shape[0]
-                # token columns are duplicate-heavy: ONE sort per column
-                # feeds everything — unique+counts fall out linearly for
-                # the agg-capable sketches, and sort-tolerant sketches
-                # (KLL) consume the sorted array directly. Without this,
-                # every sketch re-sorted the same values independently.
-                if cache[c].dtype.kind in "iub" and cache[c].shape[0]:
-                    wants_agg = any(
-                        specs[n].update_agg is not None
-                        for n in names
-                        if col_of[n] == c
-                    )
-                    wants_sorted = any(
-                        specs[n].update_sorted is not None
-                        for n in names
-                        if col_of[n] == c
-                    )
-                    sv, agg = sorted_and_agg(
-                        cache[c], wants_agg, wants_sorted
-                    )
-                    if sv is not None:
-                        sort_cache[c] = sv
-                    if agg is not None:
-                        agg_cache[c] = agg
-            for n in names:
-                c = col_of[n]
-                vals = cache[c]
-                if not vals.shape[0]:
-                    continue
-                if specs[n].update_agg is not None and c in agg_cache:
-                    uv, uc = agg_cache[c]
-                    specs[n].update_agg(sks[n], uv, uc)
-                elif specs[n].update_sorted is not None and c in sort_cache:
-                    specs[n].update_sorted(sks[n], sort_cache[c])
-                else:
-                    specs[n].update(sks[n], vals)
-            rows += sp_rows
-            lineage.append(
-                {
-                    "path": sp.path,
-                    "row_groups": list(sp.row_groups),
-                    "rows": sp_rows,
-                    "wall_ms": (time.perf_counter() - t0) * 1000.0,
-                }
-            )
-        if not lineage:
-            return
-        out = {
-            "rows": rows,
-            "values_seen": values_seen,
-            "n_splits": len(lineage),
-            "wall_ms": (time.perf_counter() - t_part) * 1000.0,
-            "lineage": lineage,
-        }
-        for n in names:
-            out[f"state_{n}"] = sks[n].to_bytes()
-        yield out
+        mine = list(it)
+        if mine:
+            yield _ingest_splits(mine, sketches, filter_expr)
 
     sc = spark.sparkContext
     if partitions is None:
@@ -263,8 +232,8 @@ def build_sketch_grouped_scan(
     Each task reads its row-group splits with pyarrow, dictionary-encodes
     the key column, stable-argsorts the integer codes and reorders the value
     column once with Arrow ``take``; each key's rows are then one contiguous
-    slice, extracted with the shared ``_column_values`` (null elements and
-    null list rows contribute nothing) and fed to the spec's update. The
+    slice, fed to the shared ``ingest_table`` kernel (null elements and
+    null list rows contribute nothing). The
     task keeps ONE sketch per key for its whole partition and returns only
     (key, state) pairs — #partitions x #keys x O(state) bytes, never rows.
 
@@ -285,14 +254,13 @@ def build_sketch_grouped_scan(
 
     def run_partition(it: Iterator[_Split]) -> Iterator[tuple[str | None, bytes]]:
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
+        # no update_sorted: a key's slice is small, and KLL keeps a small
+        # batch in arrival order, so a sorted feed would change its state
+        one = {"v": (column, replace(spec, update_sorted=None))}
         sks: dict[str | None, Any] = {}
         for sp in it:
-            tbl = pq.ParquetFile(sp.path).read_row_groups(
-                list(sp.row_groups), columns=[group_col, column],
-                use_threads=False,
-            )
+            tbl = _read_split(sp, [group_col, column])
             if tbl.num_rows == 0:
                 continue  # empty part file -> empty split (valid input)
             keys = tbl.column(group_col).combine_chunks()
@@ -310,21 +278,14 @@ def build_sketch_grouped_scan(
                 np.r_[True, sorted_codes[1:] != sorted_codes[:-1]]
             )
             bounds = np.r_[bounds, len(sorted_codes)]
-            grouped = tbl.column(column).combine_chunks().take(order)
+            grouped = tbl.select([column]).take(order)
             dict_keys = enc.dictionary.to_pylist()
             for lo, hi in zip(bounds[:-1].tolist(), bounds[1:].tolist()):
                 k = dict_keys[sorted_codes[lo]]
                 key = None if k is None else str(k)
                 if key not in sks:
                     sks[key] = spec.make()
-                vals = _column_values(grouped.slice(lo, hi - lo))
-                if not vals.shape[0]:
-                    continue
-                if spec.update_agg is not None and vals.dtype.kind in "iub":
-                    _, agg = sorted_and_agg(vals, True, False)
-                    spec.update_agg(sks[key], *agg)
-                else:
-                    spec.update(sks[key], vals)
+                ingest_table({"v": sks[key]}, one, grouped.slice(lo, hi - lo))
         for key, sk in sks.items():
             yield (key, sk.to_bytes())
 

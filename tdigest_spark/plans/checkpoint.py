@@ -9,6 +9,12 @@ A resumed run lists the checkpoint dir, re-derives the full split set from
 the (immutable) input, and schedules only the difference — then merges old
 and new partial states into the final sketches.
 
+A batch is built by the scan path's own split loop
+(``operators.scan._ingest_splits``, which feeds ``aggregate.ingest_table``);
+this module adds only the batch keying and the atomic checkpoint write. A
+checkpointed build is therefore byte-equal to ``build_sketches_scan`` when
+its batches hold the same split groups as the scan's partitions.
+
 Why parquet files per task-batch (not a transactional table): states are
 O(16 KB)-O(1 MB) blobs, writes are append-only and idempotent (file name =
 deterministic batch key; a re-run of the same batch overwrites the same
@@ -34,7 +40,7 @@ from typing import Any
 import pyarrow as pa
 
 from ..operators.aggregate import SketchSpec, merge_partials
-from ..operators.scan import parquet_splits
+from ..operators.scan import _ingest_splits, _normalize_paths, parquet_splits
 from . import fsio
 
 __all__ = ["CheckpointedBuild"]
@@ -120,99 +126,31 @@ class CheckpointedBuild:
         return [(_batch_key(b), b) for b in batches]
 
     def run(self, spark, paths: list[str] | str) -> dict[str, Any]:
-        if isinstance(paths, str):
-            import glob
-            import os
-
-            p = paths
-            paths = (
-                sorted(glob.glob(os.path.join(p, "*.parquet")))
-                if os.path.isdir(p)
-                else [p]
-            )
-        plan = self._plan(paths)
+        plan = self._plan(_normalize_paths(paths))
         done = self.completed()
         todo = [(k, b) for k, b in plan if k not in done]
 
         if todo:
             fs0, root0 = fsio.fs_and_path(self.dir)
             fsio.mkdirs(fs0, root0)
-            names, specs, sketch_map = self.names, self.specs, self.sketches
-            out_dir = self.dir
-
+            names, sketch_map, out_dir = self.names, self.sketches, self.dir
 
             # one Spark partition per batch: the batch is the atomic unit of
             # checkpointing, so task success == batch file durably written
-            def run_batch(batch: tuple[str, list]) -> dict:
+            def run_batch(batch: tuple[str, list]) -> str:
                 key, splits = batch
-                t0 = time.perf_counter()
-                # reuse the scan kernel loop by inlining its per-split work
-                from ..operators.aggregate import _column_values
-                from ..operators.aggregate import sorted_and_agg as _sorted_and_agg
-
-                import pyarrow.parquet as _pq
-
-                sks = {n: specs[n].make() for n in names}
-                cols = sorted({c for c, _ in sketch_map.values()})
-                col_of = {n: c for n, (c, _) in sketch_map.items()}
-                rows = 0
-                values_seen = 0
-                lineage = []
-                for sp in splits:
-                    ts = time.perf_counter()
-                    tbl = _pq.ParquetFile(sp.path).read_row_groups(
-                        list(sp.row_groups), columns=cols, use_threads=False
-                    )
-                    rows += tbl.num_rows
-                    cache = {c: _column_values(tbl.column(c)) for c in cols}
-                    values_seen += sum(v.shape[0] for v in cache.values())
-                    # same shared one-prep-per-column dispatch as the scan
-                    # kernel (sorted_and_agg: bincount or sort once, feed
-                    # every sketch on the column)
-                    prep: dict = {}
-                    for c, vals in cache.items():
-                        if vals.dtype.kind in "iub" and vals.shape[0]:
-                            wa = any(
-                                specs[n].update_agg is not None
-                                for n in names
-                                if col_of[n] == c
-                            )
-                            ws = any(
-                                specs[n].update_sorted is not None
-                                for n in names
-                                if col_of[n] == c
-                            )
-                            prep[c] = _sorted_and_agg(vals, wa, ws)
-                    for n in names:
-                        c = col_of[n]
-                        vals = cache[c]
-                        if not vals.shape[0]:
-                            continue
-                        sv, agg = prep.get(c, (None, None))
-                        if specs[n].update_agg is not None and agg is not None:
-                            specs[n].update_agg(sks[n], *agg)
-                        elif specs[n].update_sorted is not None and sv is not None:
-                            specs[n].update_sorted(sks[n], sv)
-                        else:
-                            specs[n].update(sks[n], vals)
-                    lineage.append(
-                        {
-                            "path": sp.path,
-                            "row_groups": list(sp.row_groups),
-                            "rows": tbl.num_rows,
-                            "wall_ms": (time.perf_counter() - ts) * 1000.0,
-                        }
-                    )
+                part = _ingest_splits(splits, sketch_map)
+                # n_splits is not stored: it is derived from the lineage
                 row = {
                     "batch_key": key,
-                    "rows": rows,
-                    "values_seen": values_seen,
-                    "wall_ms": (time.perf_counter() - t0) * 1000.0,
+                    "rows": part["rows"],
+                    "values_seen": part["values_seen"],
+                    "wall_ms": part["wall_ms"],
                     "completed_at": time.time(),
-                    "lineage": json.dumps(lineage),
+                    "lineage": json.dumps(part["lineage"]),
                 }
                 for n in names:
-                    row[f"state_{n}"] = sks[n].to_bytes()
+                    row[f"state_{n}"] = part[f"state_{n}"]
                 # idempotent durable write: same batch -> same file name;
                 # tmp + move so list-based readers never see torn files
                 # (resolved per task: executor-side fs, works for URIs too)
@@ -223,7 +161,7 @@ class CheckpointedBuild:
                 )
                 # the durable file is the result; don't pickle ~MB of state
                 # bytes back to the driver just to be discarded by count()
-                return row["batch_key"]
+                return key
 
             sc = spark.sparkContext
             sc.parallelize(todo, len(todo)).map(run_batch).count()

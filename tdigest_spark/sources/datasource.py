@@ -277,6 +277,28 @@ def _read_partition_mor(partition: _FilePartition):
             yield from tbl.combine_chunks().to_batches()
 
 
+def _read_partition(partition: _FilePartition | None):
+    """Arrow batches of one planned data file, for the batch and the stream
+    reader alike: merge-on-read when deletes or DVs attach, the
+    schema-evolution projection when the file predates the current
+    schema, else a plain parquet read."""
+    # filters can prune EVERY file; PySpark substitutes [None] for an
+    # empty partition list, so None means "empty result", not a bug
+    if partition is None:
+        return
+    if (
+        partition.pos_deletes
+        or partition.eq_deletes
+        or getattr(partition, "dvs", ())
+    ):
+        yield from _read_partition_mor(partition)
+    elif partition.mapping is not None:
+        for batch in _read_parquet_batches(partition.path):
+            yield _project_batch(batch, partition.mapping)
+    else:
+        yield from _read_parquet_batches(partition.path)
+
+
 def _plan_file_partitions(root, predicates, snapshot_id):
     """Driver-side scan plan shared by the batch reader and the streaming
     source's initial batch: a predicate/partition-pruned MOR plan with the
@@ -366,21 +388,7 @@ class _StaticIcebergReader(DataSourceReader):
         )
 
     def read(self, partition):
-        # filters can prune EVERY file; PySpark substitutes [None] for an
-        # empty partition list, so None means "empty result", not a bug
-        if partition is None:
-            return
-        if (
-            partition.pos_deletes
-            or partition.eq_deletes
-            or getattr(partition, "dvs", ())
-        ):
-            yield from _read_partition_mor(partition)
-        elif partition.mapping is not None:
-            for batch in _read_parquet_batches(partition.path):
-                yield _project_batch(batch, partition.mapping)
-        else:
-            yield from _read_parquet_batches(partition.path)
+        yield from _read_partition(partition)
 
 
 @dataclass
@@ -834,19 +842,7 @@ class _StaticIcebergStreamReader(DataSourceStreamReader):
         ]
 
     def read(self, partition):
-        if partition is None:
-            return
-        if (
-            partition.pos_deletes
-            or partition.eq_deletes
-            or getattr(partition, "dvs", ())
-        ):
-            yield from _read_partition_mor(partition)
-        elif partition.mapping is not None:
-            for batch in _read_parquet_batches(partition.path):
-                yield _project_batch(batch, partition.mapping)
-        else:
-            yield from _read_parquet_batches(partition.path)
+        yield from _read_partition(partition)
 
     def commit(self, end: dict) -> None:
         pass  # progress is durable in Spark's checkpoint, not the table

@@ -561,10 +561,13 @@ def iceberg_scan_entries_static(
                 out["dvs"].append(
                     {
                         "path": _localize(df_rec["file_path"], root),
+                        # re-rooted like file_path, or a relocated
+                        # table's DV keys the old location and stops
+                        # applying
                         "referenced": re.sub(
                             r"^file:/+",
                             "/",
-                            df_rec["referenced_data_file"],
+                            _localize(df_rec["referenced_data_file"], root),
                         ),
                         "seq": (
                             int(e["sequence_number"])

@@ -288,3 +288,33 @@ def test_avro_read_schema_matches_container():
             p, schema, [{"a": 1, "b": "x"}, {"a": 2, "b": None}]
         )
         assert avro_lite.read_schema(p) == avro_lite.read_container(p)[0]
+
+
+def test_dv_survives_table_relocation(tmp_path, spark):
+    """A table copied elsewhere (the original gone, as for a restored
+    backup) re-roots its data files onto the copy; its DV's referenced
+    file must follow, or the DV stops applying and deleted rows return."""
+    import shutil
+
+    root, _ = _table(tmp_path)
+    W.delete_where_dv(root, [("v", "<", 60)], snapshot_id=2, ts_ms=3000)
+    moved = tmp_path / "restored" / "dvtbl"
+    shutil.copytree(root, moved)
+    shutil.rmtree(root)
+
+    e = iceberg_scan_entries_static(str(moved))
+    data = {Path(d["path"]).name: d["path"] for d in e["data"]}
+    assert all(p.startswith(str(moved)) for p in data.values())
+    assert [d["referenced"] for d in e["dvs"]] == [data["f0.parquet"]]
+    assert {k: sorted(v) for k, v in deletion_vector_positions(e).items()} == {
+        data["f0.parquet"]: [0, 1, 2, 3, 4, 5]
+    }
+
+    expect = list(range(6, 20))
+    got = sorted(r.id for r in read_sequences(spark, str(moved)).collect())
+    assert got == expect
+    from tdigest_spark.sources.datasource import IcebergStaticDataSource
+
+    spark.dataSource.register(IcebergStaticDataSource)
+    ds = spark.read.format("iceberg_static").option("path", str(moved)).load()
+    assert sorted(r.id for r in ds.collect()) == expect

@@ -31,6 +31,7 @@ from tdigest_spark.operators.scan import (
     parquet_splits,
     scan_partials_rdd,
 )
+from tdigest_spark.plans.checkpoint import CheckpointedBuild
 from tdigest_spark.sources.sequence_table import (
     default_cache_dir,
     generate_sequence_table,
@@ -93,6 +94,93 @@ def test_scan_matches_dataframe_path(spark, seq_path):
         ra = np.searchsorted(vals, a["kll"].quantile(p)) / n
         rb = np.searchsorted(vals, b["kll"].quantile(p)) / n
         assert abs(ra - rb) <= 0.02, p
+
+
+def _sha256(sketches):
+    return {n: hashlib.sha256(sk.to_bytes()).hexdigest() for n, sk in sketches.items()}
+
+
+# sha256 of every SKETCHES state on the scantest_n20000 fixture, built by
+# the DataFrame path (local[4] session), the scan path
+# (target_rows_per_split=2_500, partitions=4) and CheckpointedBuild
+# (splits_per_batch=2), recorded before the three front ends shared one
+# ingest kernel: moving the dispatch must not move a byte.
+SCAN_SHA256 = {
+    "td_tokens": "7dc06a579d823a30af8deb1271636f5507f7589fc0bcb1de63d525bbf12b3184",
+    "td_ntok": "1c87e428a33aec98353d15f0f881fb81436c95adba9fe9064d055df915d479e5",
+    "hll": "6bfc97afafa57e03056d822e366fe92a951c4875b10e80ab0b30de3ead377c41",
+    "kll": "c4fac75f11cc0521a4f46f3547514fb245cd9e9c2a67464332cf6a53a6aa7452",
+    "dds": "3b1d5401543d7c235b11d4a60ccde291beb565cabddfc7dfabaea2acc266b21c",
+    "mg": "ae04a9db985958f79a676190a2e240a341ecf9edbbcaa1af75390dc953f4d1cc",
+}
+STATE_SHA256 = {
+    "dataframe": {
+        "td_tokens": "d613845b3c11d7c35c35247fede62fa43428e3cf38ab9e9ea510904f5c1a1bd8",
+        "td_ntok": "1c87e428a33aec98353d15f0f881fb81436c95adba9fe9064d055df915d479e5",
+        "hll": "6bfc97afafa57e03056d822e366fe92a951c4875b10e80ab0b30de3ead377c41",
+        "kll": "ca70f9be5f704952c9c9acf141dfda8ab4672cc86b2e89d6f76a786d1a53414a",
+        "dds": "3b1d5401543d7c235b11d4a60ccde291beb565cabddfc7dfabaea2acc266b21c",
+        "mg": "cb9255b14fe4e6c87773c603e5291e981fa2d4b2ad02f024eb9b6800cd10cff8",
+    },
+    "scan": SCAN_SHA256,
+    "checkpoint": SCAN_SHA256,
+}
+
+
+def _build_three_ways(spark, seq_path, how, tmp_path):
+    if how == "dataframe":
+        return build_sketches(spark.read.parquet(str(seq_path)), SKETCHES)
+    if how == "scan":
+        return build_sketches_scan(
+            spark, str(seq_path), SKETCHES, target_rows_per_split=2_500,
+            partitions=4,
+        )
+    return CheckpointedBuild(
+        tmp_path / "ckpt", SKETCHES, target_rows_per_split=2_500,
+        splits_per_batch=2,
+    ).run(spark, str(seq_path))
+
+
+@pytest.mark.parametrize("how", sorted(STATE_SHA256))
+def test_states_pinned(spark, seq_path, tmp_path, how):
+    got = _build_three_ways(spark, seq_path, how, tmp_path)
+    assert _sha256(got) == STATE_SHA256[how]
+
+
+def test_checkpoint_matches_scan_bytes(spark, seq_path, tmp_path):
+    """8 splits in batches of 2 hold the same split groups as 4 scan
+    partitions, so every folded state is byte-equal."""
+    files = sorted(str(p) for p in seq_path.glob("*.parquet"))
+    assert len(parquet_splits(files, target_rows_per_split=2_500)) == 8
+    scan = build_sketches_scan(
+        spark, files, SKETCHES, target_rows_per_split=2_500, partitions=4
+    )
+    cb = CheckpointedBuild(
+        tmp_path / "ckpt", SKETCHES, target_rows_per_split=2_500,
+        splits_per_batch=2,
+    )
+    ckpt = cb.run(spark, files)
+    assert len(cb.metrics()) == 4
+    for name in SKETCHES:
+        assert ckpt[name].to_bytes() == scan[name].to_bytes(), name
+
+
+def test_checkpoint_file_schema(spark, seq_path, tmp_path):
+    """The batch file layout is a resume contract: a checkpoint dir
+    written by an earlier build must still be read back as complete."""
+    cb = CheckpointedBuild(
+        tmp_path / "ckpt", SKETCHES, target_rows_per_split=2_500,
+        splits_per_batch=4,
+    )
+    cb.run(spark, str(seq_path))
+    files = sorted((tmp_path / "ckpt").glob("batch-*.parquet"))
+    assert len(files) == 2
+    for f in files:
+        assert pq.read_schema(f).names == [
+            "batch_key", "rows", "values_seen", "wall_ms", "completed_at",
+            "lineage",
+        ] + [f"state_{n}" for n in SKETCHES]
+    assert sum(m["n_splits"] for m in cb.metrics()) == 8
 
 
 def test_scan_partition_coalescing_invariant(spark, seq_path):
@@ -216,7 +304,9 @@ def test_grouped_scan_matches_grouped_dataframe_path(spark, seq_path):
 # sha256 of every per-key state from build_sketch_grouped_scan on the
 # scantest_n20000 fixture (target_rows_per_split=2_500, partitions=4),
 # recorded from the groupByKey implementation before the grouped build
-# became one stage: the driver fold must reproduce it byte for byte.
+# became one stage: the driver fold must reproduce it byte for byte. The
+# KLL and DDSketch pins were recorded before the grouped build moved onto
+# the shared ingest kernel.
 GROUPED_STATE_SHA256 = {
     ("tokens", "td"): {
         "books": "08b0eb536f69f070223916a39791343f544c64572cdecab0351ce783d7c6fd2f",
@@ -232,6 +322,20 @@ GROUPED_STATE_SHA256 = {
         "web": "3a0242f7a23e6f513bb0da45997193bb158e587fac9b9fcb7311fe115d32fc98",
         "wiki": "ca78d0e0a630461d23b1e9ab7aaf83efef1bddb9bbeaf09427909505dc76a20b",
     },
+    ("n_tok", "dds"): {
+        "books": "94898edd166b0773b355c51979918ca738742e76b80063eb9c3230af6dae75d8",
+        "code": "bdd7904c3d81bcd5dfdb858080820b53c67a4fd8df1341796807c5c0a9c187f2",
+        "rare": "15c5242645ff8d53eb9e2736953dbf2df34bff3972ed8e72b8fa2805674cc8ed",
+        "web": "112d0409326178367a1c7ae8a467ceea67b233fbc4a8e38319ca33f0cb1f4e2e",
+        "wiki": "300ee4d21772f895c4bc66d1e71579c8c2eed2bb105aa47c5863a52244b4cfde",
+    },
+    ("n_tok", "kll"): {
+        "books": "692a38c3b8bc427c42929c5ba01908d1a4e3fab9177dcbea27073ca7a4beebcd",
+        "code": "9fbc1f1930f51e5c244067a89509e9f262397781603c4310120e09da738b6790",
+        "rare": "f699959d86bea9c069dfa58509821abcea12a9f5404c924e1740255aca07befc",
+        "web": "2d0c08566bc9993f433f5209cbf6b6cee32ef5209c0e5d2e57e99afde6acace5",
+        "wiki": "c756d2d23c4a49cef3ffaed108fd83f415db32c0cb2719047572c6114b04c0e7",
+    },
     ("n_tok", "hll"): {
         "books": "c49ed4baf707d26602ec74e6fab9da127d8745c130bad3c76a922d77705b05ab",
         "code": "d3e721f396a3c5e1f04c6f42e95a2617aaef48931fb5fcb0ed0893a12df9e38c",
@@ -240,7 +344,12 @@ GROUPED_STATE_SHA256 = {
         "wiki": "4fbf1321356a38caa0d5707eb8a1b9636dbe36a487343ae23f1d40f080abd7e4",
     },
 }
-GROUPED_SPECS = {"td": TDIGEST(0.01), "hll": HLL_INTS(12)}
+GROUPED_SPECS = {
+    "td": TDIGEST(0.01),
+    "hll": HLL_INTS(12),
+    "kll": KLL_SPEC(200),
+    "dds": DDSKETCH_SPEC(0.01),
+}
 
 
 @pytest.mark.parametrize("column,spec_name", sorted(GROUPED_STATE_SHA256))

@@ -1,0 +1,42 @@
+"""Source hygiene: every program file byte-compiles with SyntaxWarning
+promoted to an error, so an invalid escape such as ``'\\s'`` in a plain
+(non-raw) string literal cannot land silently. Python 3.12+ reports such
+escapes as SyntaxWarning and 3.11 as DeprecationWarning; both are errors
+here."""
+
+import hashlib
+import warnings
+from pathlib import Path
+
+import pytest
+
+ROOT = Path(__file__).resolve().parents[1]
+SOURCES = [ROOT / "__spark_entry__.py"] + sorted(
+    (ROOT / "tdigest_spark").rglob("*.py")
+)
+
+
+@pytest.mark.parametrize("path", SOURCES, ids=lambda p: str(p.relative_to(ROOT)))
+def test_compiles_without_syntax_warnings(path):
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", SyntaxWarning)
+        warnings.simplefilter("error", DeprecationWarning)
+        compile(path.read_bytes(), str(path), "exec")
+
+
+# sha256 of the oracle SQL strings that split on the regex ``\s+``,
+# recorded while they still used the invalid ``'\s'`` escape: the escape
+# fix must leave the SQL that reaches DuckDB byte for byte the same.
+ORACLE_SQL_SHA256 = {
+    "doc_zipf_slope": "2b6151dbd7afb5d303ac6b70188e0c96df9ccc2e6cd803dcc5c2d1ae0bda9561",
+    "doc_bm25_topk": "27c052cd5d3fe7feabdcc4d01a15a5d8b0488154228ae9200ac7c131b4fee54b",
+}
+
+
+def test_oracle_regex_escapes_unchanged():
+    import __spark_entry__ as m
+
+    sql = m.oracle_sql()
+    for name, digest in ORACLE_SQL_SHA256.items():
+        assert "'\\s+'" in sql[name], name
+        assert hashlib.sha256(sql[name].encode()).hexdigest() == digest, name

@@ -381,3 +381,63 @@ def test_build_weighted_digest_grouped(spark):
         mc = np.cumsum(wts) - wts / 2.0
         q50 = float(np.interp(0.5 * wts.sum(), mc, vals))
         assert abs(d.quantile(0.5) - q50) < 1e-9
+
+
+# sha256 over [key, rows, sha256(state)] per key (sorted) of the grouped
+# DataFrame builds on the scantest_n20000 fixture, with null group keys
+# (every 13th n_tok) and null weights (every 7th), recorded before both
+# builds shared one mapInPandas/applyInPandas skeleton.
+GROUPED_DF_SHA256 = {
+    "td_ntok": "f5df2fefa865e4794d219af8b7d8d33597aa18520bcde821d23328f998bccf91",
+    "td_tokens": "e6f90731797c4e3332058270ab28a7c1939627194a4a8f6a5e9f1d5efdbe80c7",
+    "hll": "79a815b10dd7e5f9a45292bdfadfbafa82ae7a8d33dce36bfbf47e1a57a8111f",
+    "kll": "d1cc7527d97c30f89c4db552d62eb2c658cb202f7cba4dd22120e47b4056278a",
+    "weighted": "b312f4f84dfd4f055decaec73dd0dc4b0bd8896066dd11ed2e790a116ffae156",
+}
+
+
+@pytest.mark.parametrize("build", sorted(GROUPED_DF_SHA256))
+def test_grouped_dataframe_states_pinned(spark, build):
+    import hashlib
+    import json
+
+    from pyspark.sql import functions as F
+
+    from tdigest_spark.operators.aggregate import build_weighted_digest_grouped
+    from tdigest_spark.sources.sequence_table import (
+        default_cache_dir,
+        generate_sequence_table,
+    )
+
+    path = generate_sequence_table(
+        default_cache_dir() / "scantest_n20000",
+        n_rows=20_000,
+        seed=3,
+        rows_per_file=2_500,
+    )
+    df = (
+        spark.read.parquet(str(path))
+        .withColumn(
+            "w",
+            F.when(F.col("n_tok") % 7 == 0, F.lit(None)).otherwise(
+                (F.col("n_tok") % 5 + 1).cast("double")
+            ),
+        )
+        .withColumn(
+            "src2",
+            F.when(F.col("n_tok") % 13 == 0, F.lit(None)).otherwise(
+                F.col("source")
+            ),
+        )
+    )
+    if build == "weighted":
+        out = build_weighted_digest_grouped(df, ["src2"], "n_tok", "w")
+    else:
+        column = "tokens" if build == "td_tokens" else "n_tok"
+        spec = {"hll": HLL_INTS(12), "kll": KLL_SPEC(200)}.get(build, TDIGEST(0.01))
+        out = build_sketch_grouped(df, ["src2"], column, spec)
+    got = sorted(
+        [str(r["src2"]), r["rows"], hashlib.sha256(bytes(r["state"])).hexdigest()]
+        for r in out.collect()
+    )
+    assert hashlib.sha256(json.dumps(got).encode()).hexdigest() == GROUPED_DF_SHA256[build]
