@@ -73,13 +73,14 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(orders.join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)),
         li.l_orderkey == F.col("o_orderkey"),
     )
+    # round to cents as DuckDB's ROUND(double, 2) in the oracle does,
+    # round(x * 100) / 100: Spark's F.round(x, 2) rounds the exact binary
+    # value of x, so a sum that is a half-cent tie in decimal but sits one
+    # ulp below it in double would round down where the oracle rounds up
+    revenue = F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount")))
     return (
         joined.groupBy("o_orderkey", "o_orderdate")
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
-        )
+        .agg((F.round(revenue * 100) / 100).alias("revenue"))
         .orderBy(F.desc("revenue"), F.col("o_orderkey"))
         .limit(10)
         .select("o_orderkey", F.col("o_orderdate").cast("date").cast("string").alias("o_orderdate"), "revenue")

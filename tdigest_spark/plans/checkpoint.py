@@ -9,6 +9,16 @@ A resumed run lists the checkpoint dir, re-derives the full split set from
 the (immutable) input, and schedules only the difference — then merges old
 and new partial states into the final sketches.
 
+A batch never spans two files: ``splits_per_batch`` chunks the splits of
+one file at a time. Data files of a growing table (an Iceberg append)
+carry random names, so they land anywhere in the sorted path list; were
+batches cut across files, one appended file would re-key its own batch
+and every batch after it, and a refresh would re-scan most of the table.
+Per-file batches make the plan append-stable: an appended file adds only
+its own batch keys and leaves every existing key alone. The plan is still
+a pure function of the final file set, so a refresh after any sequence of
+appends is byte-equal to a fresh build over the final snapshot.
+
 A batch is built by the scan path's own split loop
 (``operators.scan._ingest_splits``, which feeds ``aggregate.ingest_table``);
 this module adds only the batch keying and the atomic checkpoint write. A
@@ -17,10 +27,12 @@ its batches hold the same split groups as the scan's partitions.
 
 Why parquet files per task-batch (not a transactional table): states are
 O(16 KB)-O(1 MB) blobs, writes are append-only and idempotent (file name =
-deterministic batch key; a re-run of the same batch overwrites the same
-file with identical content), and reads are a single columnar scan. At
-1000-executor scale the checkpoint table stays tiny (#batches rows), and
-restart cost is O(completed work skipped).
+``batch-<key>.parquet``, a deterministic batch key; a re-run of the same
+batch overwrites the same file with identical content), and reads are a
+single columnar scan. A run reads only its own plan's files, each once, so
+stale batch files left by earlier plans cost nothing. At 1000-executor
+scale the checkpoint table stays tiny (#batches rows), and restart cost
+is O(completed work skipped).
 
 The reference has no persistence at all (its closest notion is
 toArray()/push_centroid re-ingest, /root/reference/tdigest.js:46-57,
@@ -34,8 +46,9 @@ import hashlib
 import json
 import posixpath
 import time
+from itertools import groupby
 from pathlib import Path
-from typing import Any
+from typing import Any, Iterable
 
 import pyarrow as pa
 
@@ -82,16 +95,25 @@ class CheckpointedBuild:
 
     # -- checkpoint table ---------------------------------------------------
 
-    def completed(self) -> dict[str, dict]:
-        """batch_key -> stored row (states + lineage) for finished batches."""
+    def completed(self, keys: Iterable[str] | None = None) -> dict[str, dict]:
+        """batch_key -> stored row (states + lineage) for finished batches.
+
+        With ``keys``, only the files ``batch-<key>.parquet`` of those keys
+        are opened; without, every batch file in the directory is. An
+        unreadable (torn) file counts as not finished."""
         out: dict[str, dict] = {}
         fs, root = fsio.fs_and_path(self.dir)
-        for f in fsio.list_files(fs, root):
-            name = posixpath.basename(f)
-            if not (name.startswith("batch-") and name.endswith(".parquet")):
-                continue
+        present = [posixpath.basename(f) for f in fsio.list_files(fs, root)]
+        if keys is None:
+            names = [
+                n for n in present
+                if n.startswith("batch-") and n.endswith(".parquet")
+            ]
+        else:
+            names = sorted(set(present) & {f"batch-{k}.parquet" for k in keys})
+        for name in names:
             try:
-                tbl = fsio.read_table(fs, f)
+                tbl = fsio.read_table(fs, fsio.join(root, name))
             except Exception:
                 continue  # torn write of an in-flight batch: redo it
             for row in tbl.to_pylist():
@@ -118,16 +140,22 @@ class CheckpointedBuild:
     # -- execution ----------------------------------------------------------
 
     def _plan(self, paths: list[str]) -> list[tuple[str, list]]:
-        splits = parquet_splits(paths, self.target_rows_per_split)
-        batches = [
-            splits[i : i + self.splits_per_batch]
-            for i in range(0, len(splits), self.splits_per_batch)
-        ]
+        # per-file batches: an appended file never re-keys another's batch
+        batches = []
+        for _, group in groupby(
+            parquet_splits(paths, self.target_rows_per_split),
+            key=lambda sp: sp.path,
+        ):
+            splits = list(group)
+            batches += [
+                splits[i : i + self.splits_per_batch]
+                for i in range(0, len(splits), self.splits_per_batch)
+            ]
         return [(_batch_key(b), b) for b in batches]
 
     def run(self, spark, paths: list[str] | str) -> dict[str, Any]:
         plan = self._plan(_normalize_paths(paths))
-        done = self.completed()
+        done = self.completed([k for k, _ in plan])
         todo = [(k, b) for k, b in plan if k not in done]
 
         if todo:
@@ -166,12 +194,14 @@ class CheckpointedBuild:
             sc = spark.sparkContext
             sc.parallelize(todo, len(todo)).map(run_batch).count()
 
-        # merge only from what is durably on disk (the checkpoint is the
-        # source of truth; a re-read also validates the files round-trip) —
-        # and ONLY the current plan's batches: the dir may hold stale files
-        # from an earlier run with different paths/split params, and merging
-        # everything in the dir would double-count those rows silently
-        done = self.completed()
+            # merge only from what is durably on disk (the checkpoint is
+            # the source of truth; a re-read also validates the files
+            # round-trip): read back just the batches this job wrote
+            done.update(self.completed([k for k, _ in todo]))
+
+        # ONLY the current plan's batches are merged: the dir may hold stale
+        # files from an earlier run with different paths/split params, and
+        # merging everything in the dir would double-count those rows
         missing = [k for k, _ in plan if k not in done]
         if missing:
             raise RuntimeError(

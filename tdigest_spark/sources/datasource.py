@@ -869,7 +869,7 @@ class _AvroLiteReader(DataSourceReader):
         if not self.dir:
             raise ValueError("avro_lite requires .option('path', <dir>)")
         self.fields = [
-            f["name"] for f in _avro_first_schema(self.dir)["fields"]
+            f["name"] for f in _avro_schema(self.dir)["fields"]
         ]
 
     def partitions(self):
@@ -887,7 +887,11 @@ class _AvroLiteReader(DataSourceReader):
             yield tuple(r.get(f) for f in fields)
 
 
-def _avro_first_schema(path_dir) -> dict:
+def _avro_schema(path_dir) -> dict:
+    """The one writer schema every container under ``path_dir`` shares.
+    A container whose embedded schema differs from the first one's raises:
+    reading it by the first schema's field names would yield ``None`` for
+    renamed or missing fields."""
     from .avro_lite import read_schema
 
     if not path_dir:
@@ -895,8 +899,15 @@ def _avro_first_schema(path_dir) -> dict:
     files = sorted(Path(path_dir).glob("*.avro"))
     if not files:
         raise ValueError(f"no .avro container files under {path_dir!r}")
-    # header-only read: schema discovery must not decode the file
-    return read_schema(files[0])
+    # header-only reads: schema discovery must not decode any file
+    schema = read_schema(files[0])
+    for f in files[1:]:
+        if read_schema(f) != schema:
+            raise ValueError(
+                f"avro container {str(f)!r} has a different schema than "
+                f"{str(files[0])!r}"
+            )
+    return schema
 
 
 _AVRO_TO_SPARK = {
@@ -914,16 +925,16 @@ class AvroLiteDataSource(DataSource):
     """spark.read.format("avro_lite").option("path", dir).load() — a
     distributed reader for Avro object-container files on top of the
     repo's pure-python Avro codec (the one the Iceberg manifests use).
-    The schema comes from the first container's EMBEDDED writer schema
-    (Avro's self-describing property); nullable unions map to nullable
-    Spark columns."""
+    The schema comes from the containers' EMBEDDED writer schema (Avro's
+    self-describing property), which must be the same in every container;
+    nullable unions map to nullable Spark columns."""
 
     @classmethod
     def name(cls) -> str:
         return "avro_lite"
 
     def schema(self) -> str:
-        sch = _avro_first_schema(self.options.get("path"))
+        sch = _avro_schema(self.options.get("path"))
 
         def one(t) -> str:
             if isinstance(t, list):  # ["null", X] nullable union

@@ -7,12 +7,26 @@ resuming over the full input: the resumed run must only scan the missing
 batches and the merged result must equal a from-scratch build's totals.
 """
 
+import json
+import random
 import shutil
+import uuid
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
-from tdigest_spark.operators.aggregate import HLL_INTS, TDIGEST, build_sketches
+from tdigest_spark.operators.aggregate import (
+    HLL_INTS,
+    KLL_SPEC,
+    TDIGEST,
+    TDIGEST_DISCRETE,
+    build_sketches,
+)
 from tdigest_spark.plans.checkpoint import CheckpointedBuild
+from tdigest_spark.sources import iceberg_write as W
+from tdigest_spark.sources.iceberg import iceberg_scan_paths_static
 from tdigest_spark.sources.sequence_table import (
     default_cache_dir,
     generate_sequence_table,
@@ -52,7 +66,7 @@ def test_full_build_and_pure_resume(spark, seq_path, ckpt_dir):
     first = cb.run(spark, _files(seq_path))
     assert int(first["td"].n) == 16_000
     n_batches = len(cb.metrics())
-    assert n_batches == 4  # 8 files -> 8 splits -> 4 batches of 2
+    assert n_batches == 8  # 8 one-split files -> one batch per file
 
     # second run: everything checkpointed, no new batch files appear
     before = sorted(p.name for p in ckpt_dir.glob("batch-*.parquet"))
@@ -71,13 +85,13 @@ def test_resume_after_partial_failure(spark, seq_path, ckpt_dir):
     # simulated crash: only half the input was processed before death
     cb.run(spark, files[:4])
     done_before = set(r["batch_key"] for r in cb.metrics())
-    assert len(done_before) == 2
+    assert len(done_before) == 4
 
     # resume over the full input: previously-done batches are reused
     out = cb.run(spark, files)
     done_after = set(r["batch_key"] for r in cb.metrics())
     assert done_before <= done_after
-    assert len(done_after) == 4
+    assert len(done_after) == 8
     assert int(out["td"].n) == 16_000
 
     # exactly-mergeable sketch must equal the non-checkpointed build
@@ -110,23 +124,15 @@ def test_torn_checkpoint_file_is_redone(spark, seq_path, ckpt_dir):
     victim.write_bytes(b"not parquet")  # simulate torn write
     out = cb.run(spark, _files(seq_path))
     assert int(out["td"].n) == 16_000
-    assert len(cb.metrics()) == 4
+    assert len(cb.metrics()) == 8
+    # the torn batch was rebuilt in place, not merely skipped
+    assert pq.read_table(victim).num_rows == 1
 
 
 def test_checkpoint_resumes_across_iceberg_appends(tmp_path, spark):
     """Snapshot-aware incremental maintenance: after an Iceberg append,
     a resumed CheckpointedBuild schedules batches only for the delta file
     and the merged digest equals a from-scratch build of the new state."""
-    import json
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from tdigest_spark.operators.aggregate import TDIGEST_DISCRETE
-    from tdigest_spark.plans.checkpoint import CheckpointedBuild
-    from tdigest_spark.sources import iceberg_write as W
-    from tdigest_spark.sources.iceberg import iceberg_scan_paths_static
-
     root = tmp_path / "tbl"
     W.create_table(root, ts_ms=1000)
     f1 = root / "data" / "a.parquet"
@@ -154,3 +160,83 @@ def test_checkpoint_resumes_across_iceberg_appends(tmp_path, spark):
     )
     d_full = cb2.run(spark, iceberg_scan_paths_static(str(root)))["d"]
     assert d2.to_bytes() == d_full.to_bytes()
+
+
+APPEND_SKETCHES = {
+    "d": ("x", TDIGEST_DISCRETE()),
+    "td": ("v", TDIGEST(0.01)),
+    "kll": ("v", KLL_SPEC(200)),
+    "hll": ("x", HLL_INTS(12)),
+}
+
+
+def _batch_files(done: dict, key: str) -> list[str]:
+    lineage = json.loads(done[key]["lineage"])
+    return [rec["path"].rsplit("/", 1)[1] for rec in lineage]
+
+
+def test_appends_scan_only_the_new_file(tmp_path, spark):
+    """Append stability at default arguments: each appended file adds
+    exactly one batch key whose lineage names only that file, even though
+    the writer's random file names land anywhere in the sorted path list;
+    every file is scanned once over the whole run, and the refreshed
+    states are byte-equal to a fresh build over the final snapshot."""
+    root = tmp_path / "tbl"
+    W.create_table(root, ts_ms=1000)
+    rnd = random.Random(6)
+    names = [
+        f"part-{uuid.UUID(int=rnd.getrandbits(128), version=4).hex}.parquet"
+        for _ in range(5)
+    ]
+    assert names != sorted(names)  # commit order is not path order
+    rng = np.random.default_rng(6)
+    cb = CheckpointedBuild(tmp_path / "ckpt", APPEND_SKETCHES)
+    seen: set[str] = set()
+    scanned = 0
+    for i, name in enumerate(names):
+        f = root / "data" / name
+        pq.write_table(
+            pa.table({
+                "x": rng.integers(0, 500, 1_000),
+                "v": rng.normal(10.0 * i, 3.0, 1_000),
+            }),
+            f,
+        )
+        W.append_snapshot(root, [f], ts_ms=2000 + i)
+        out = cb.run(spark, iceberg_scan_paths_static(str(root)))
+        assert out["d"].n == 1_000 * (i + 1)
+        done = cb.completed()
+        new = set(done) - seen
+        assert len(new) == 1, f"append {i} re-keyed {len(new)} batches"
+        files = _batch_files(done, new.pop())
+        assert files == [name]
+        scanned += len(files)
+        seen = set(done)
+    assert scanned == len(names)
+
+    fresh = CheckpointedBuild(tmp_path / "fresh", APPEND_SKETCHES).run(
+        spark, iceberg_scan_paths_static(str(root))
+    )
+    for n in APPEND_SKETCHES:
+        assert out[n].to_bytes() == fresh[n].to_bytes(), n
+
+
+def test_splits_per_batch_chunks_within_one_file(tmp_path, spark):
+    """``splits_per_batch`` groups splits of one file only: a 5-row-group
+    file cut into 5 splits makes batches of 2, 2 and 1, and the one-split
+    file beside it gets its own batch instead of filling the last one."""
+    big, small = tmp_path / "a.parquet", tmp_path / "b.parquet"
+    pq.write_table(pa.table({"x": np.arange(500)}), big, row_group_size=100)
+    pq.write_table(pa.table({"x": np.arange(500, 600)}), small)
+    cb = CheckpointedBuild(
+        tmp_path / "ckpt", {"d": ("x", TDIGEST_DISCRETE())},
+        target_rows_per_split=100, splits_per_batch=2,
+    )
+    out = cb.run(spark, [str(big), str(small)])
+    assert out["d"].n == 600
+    done = cb.completed()
+    batches = sorted(_batch_files(done, k) for k in done)
+    assert batches == [
+        ["a.parquet"], ["a.parquet", "a.parquet"], ["a.parquet", "a.parquet"],
+        ["b.parquet"],
+    ]

@@ -825,3 +825,40 @@ def test_stream_source_rate_limit_caps_within_run(registered, tmp_path):
         q.stop()
     got = sorted(r.v for r in registered.read.parquet(out).collect())
     assert got == list(range(40))
+
+
+def _avro_events(root, name, fields, records):
+    from tdigest_spark.sources import avro_lite
+
+    schema = {"type": "record", "name": "event", "fields": fields}
+    avro_lite.write_container(root / name, schema, records)
+
+
+def test_avro_lite_reads_containers_sharing_a_schema(spark, tmp_path):
+    from tdigest_spark.sources.datasource import AvroLiteDataSource
+
+    fields = [{"name": "id", "type": "long"},
+              {"name": "tag", "type": ["null", "string"]}]
+    _avro_events(tmp_path, "a.avro", fields, [{"id": 1, "tag": "x"}])
+    _avro_events(tmp_path, "b.avro", fields, [{"id": 2, "tag": None}])
+    spark.dataSource.register(AvroLiteDataSource)
+    rows = spark.read.format("avro_lite").option("path", str(tmp_path)).load()
+    assert sorted(tuple(r) for r in rows.collect()) == [(1, "x"), (2, None)]
+
+
+def test_avro_lite_raises_on_schema_drift(spark, tmp_path):
+    """A container whose writer schema renamed a field must fail loudly,
+    naming that container, instead of reading the field as all-None."""
+    from tdigest_spark.sources.datasource import AvroLiteDataSource
+
+    _avro_events(tmp_path, "a.avro", [{"name": "id", "type": "long"},
+                                      {"name": "tag", "type": "string"}],
+                 [{"id": 1, "tag": "x"}])
+    _avro_events(tmp_path, "b.avro", [{"name": "id", "type": "long"},
+                                      {"name": "label", "type": "string"}],
+                 [{"id": 2, "label": "y"}])
+    with pytest.raises(ValueError, match="b.avro"):
+        AvroLiteDataSource({"path": str(tmp_path)}).schema()
+    spark.dataSource.register(AvroLiteDataSource)
+    with pytest.raises(Exception, match="b.avro"):
+        spark.read.format("avro_lite").option("path", str(tmp_path)).load().collect()

@@ -101,10 +101,10 @@ def _sha256(sketches):
 
 
 # sha256 of every SKETCHES state on the scantest_n20000 fixture, built by
-# the DataFrame path (local[4] session), the scan path
-# (target_rows_per_split=2_500, partitions=4) and CheckpointedBuild
-# (splits_per_batch=2), recorded before the three front ends shared one
-# ingest kernel: moving the dispatch must not move a byte.
+# the DataFrame path (local[4] session) and the scan path
+# (target_rows_per_split=2_500, partitions=4), recorded before the three
+# front ends shared one ingest kernel: moving the dispatch must not move a
+# byte.
 SCAN_SHA256 = {
     "td_tokens": "7dc06a579d823a30af8deb1271636f5507f7589fc0bcb1de63d525bbf12b3184",
     "td_ntok": "1c87e428a33aec98353d15f0f881fb81436c95adba9fe9064d055df915d479e5",
@@ -112,6 +112,15 @@ SCAN_SHA256 = {
     "kll": "c4fac75f11cc0521a4f46f3547514fb245cd9e9c2a67464332cf6a53a6aa7452",
     "dds": "3b1d5401543d7c235b11d4a60ccde291beb565cabddfc7dfabaea2acc266b21c",
     "mg": "ae04a9db985958f79a676190a2e240a341ecf9edbbcaa1af75390dc953f4d1cc",
+}
+# CheckpointedBuild (splits_per_batch=2) batches per file: each of the 8
+# files is one split, so its 8 batches are the split groups of 8 scan
+# partitions. KLL and MG fold per-partition states, so they differ from
+# the 4-partition pin; the other four states are partition-invariant here.
+SCAN8_SHA256 = {
+    **SCAN_SHA256,
+    "kll": "d31eb720a663884c00b97b2ad8fdb5f4bc26a28c07bf9a6d11297773ee2cf48f",
+    "mg": "7618a91d70320e97a4b3fcec5dcd29963b856d28fded922664da97f1d70030ea",
 }
 STATE_SHA256 = {
     "dataframe": {
@@ -123,18 +132,22 @@ STATE_SHA256 = {
         "mg": "cb9255b14fe4e6c87773c603e5291e981fa2d4b2ad02f024eb9b6800cd10cff8",
     },
     "scan": SCAN_SHA256,
-    "checkpoint": SCAN_SHA256,
+    "checkpoint": SCAN8_SHA256,
 }
+
+
+def _build_scan(spark, seq_path, partitions):
+    return build_sketches_scan(
+        spark, str(seq_path), SKETCHES, target_rows_per_split=2_500,
+        partitions=partitions,
+    )
 
 
 def _build_three_ways(spark, seq_path, how, tmp_path):
     if how == "dataframe":
         return build_sketches(spark.read.parquet(str(seq_path)), SKETCHES)
     if how == "scan":
-        return build_sketches_scan(
-            spark, str(seq_path), SKETCHES, target_rows_per_split=2_500,
-            partitions=4,
-        )
+        return _build_scan(spark, seq_path, 4)
     return CheckpointedBuild(
         tmp_path / "ckpt", SKETCHES, target_rows_per_split=2_500,
         splits_per_batch=2,
@@ -145,22 +158,24 @@ def _build_three_ways(spark, seq_path, how, tmp_path):
 def test_states_pinned(spark, seq_path, tmp_path, how):
     got = _build_three_ways(spark, seq_path, how, tmp_path)
     assert _sha256(got) == STATE_SHA256[how]
+    if how == "checkpoint":
+        assert _sha256(_build_scan(spark, seq_path, 8)) == SCAN8_SHA256
 
 
 def test_checkpoint_matches_scan_bytes(spark, seq_path, tmp_path):
-    """8 splits in batches of 2 hold the same split groups as 4 scan
-    partitions, so every folded state is byte-equal."""
+    """8 one-split files in per-file batches hold the same split groups as
+    8 scan partitions, so every folded state is byte-equal."""
     files = sorted(str(p) for p in seq_path.glob("*.parquet"))
     assert len(parquet_splits(files, target_rows_per_split=2_500)) == 8
     scan = build_sketches_scan(
-        spark, files, SKETCHES, target_rows_per_split=2_500, partitions=4
+        spark, files, SKETCHES, target_rows_per_split=2_500, partitions=8
     )
     cb = CheckpointedBuild(
         tmp_path / "ckpt", SKETCHES, target_rows_per_split=2_500,
         splits_per_batch=2,
     )
     ckpt = cb.run(spark, files)
-    assert len(cb.metrics()) == 4
+    assert len(cb.metrics()) == 8
     for name in SKETCHES:
         assert ckpt[name].to_bytes() == scan[name].to_bytes(), name
 
@@ -174,7 +189,7 @@ def test_checkpoint_file_schema(spark, seq_path, tmp_path):
     )
     cb.run(spark, str(seq_path))
     files = sorted((tmp_path / "ckpt").glob("batch-*.parquet"))
-    assert len(files) == 2
+    assert len(files) == 8  # one batch per one-split file
     for f in files:
         assert pq.read_schema(f).names == [
             "batch_key", "rows", "values_seen", "wall_ms", "completed_at",
