@@ -15,6 +15,11 @@ so the mergeable-UDAF pattern is built explicitly (SURVEY.md §7.6):
       grouped Spark rounds for very large partition counts
       (treeAggregate-style, per BASELINE.json north_star).
 
+Every front end feeds the one batch kernel ``ingest_table``; grouped builds
+reach it through the one key split ``ingest_grouped``. Values stay Arrow
+until ``_column_values`` extracts them: no build here goes through pandas,
+whose float64 coding of a nullable bigint would round values above 2**53.
+
 Scale notes (100 TB / 1000 executors): phase 1 is embarrassingly parallel and
 shuffle-free; the only data movement is #partitions × O(16 KB) states. The
 fan-in path (``tree_merge_states``) keeps every round's group below
@@ -24,7 +29,7 @@ fanout × state_size bytes.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 from typing import Any, Callable, Iterator
 
 import numpy as np
@@ -55,12 +60,12 @@ __all__ = [
     "build_sketch_grouped",
     "build_weighted_digest",
     "build_weighted_digest_grouped",
-    "weighted_digest_partials",
     "partials_df",
     "merge_partials",
     "fold_states",
     "sorted_and_agg",
     "ingest_table",
+    "ingest_grouped",
     "tree_merge_states",
 ]
 
@@ -81,6 +86,9 @@ class SketchSpec:
     # sketches that need the full multiset but tolerate (benefit from)
     # pre-sorted input — shares the column's single sort (KLL)
     update_sorted: Callable[[Any, np.ndarray], Any] | None = None
+    # (values, weights) ingest: the only update a (value, weight) pair
+    # column may feed (t-digest's push(x, n), tdigest.js:82-91)
+    update_weighted: Callable[[Any, np.ndarray, np.ndarray], Any] | None = None
 
     def merge_bytes(self, a: bytes | None, b: bytes | None) -> bytes | None:
         if a is None:
@@ -101,6 +109,7 @@ def _mk_tdigest(delta: float = 0.01):
         from_bytes=lambda b: TDigest.from_bytes(b),
         update=lambda sk, v: sk.push(v),
         update_agg=lambda sk, uv, uc: sk.push(uv, uc),
+        update_weighted=lambda sk, v, w: sk.push(v, w),
     )
 
 
@@ -289,6 +298,41 @@ def _column_values(col: pa.ChunkedArray | pa.Array) -> np.ndarray:
     return col.to_numpy(zero_copy_only=False)
 
 
+def _pair_values(
+    vc: pa.ChunkedArray | pa.Array, wc: pa.ChunkedArray | pa.Array
+) -> tuple[np.ndarray, np.ndarray]:
+    """(value, weight) columns -> two aligned float64 arrays. Nulls drop
+    JOINTLY: a row contributes only if both sides are present, or the
+    arrays would misalign."""
+    import pyarrow.compute as pc
+
+    if isinstance(vc, pa.ChunkedArray):
+        vc, wc = vc.combine_chunks(), wc.combine_chunks()
+    if vc.null_count or wc.null_count:
+        keep = pc.and_(vc.is_valid(), wc.is_valid())
+        vc, wc = vc.filter(keep), wc.filter(keep)
+    return (
+        vc.to_numpy(zero_copy_only=False).astype(np.float64, copy=False),
+        wc.to_numpy(zero_copy_only=False).astype(np.float64, copy=False),
+    )
+
+
+def _sketch_columns(sketches: dict[str, tuple[Any, SketchSpec]]) -> list[str]:
+    """The columns a sketch map reads, sorted. A ``(value, weight)`` pair
+    reads both, and only a spec with ``update_weighted`` may take one."""
+    cols: set[str] = set()
+    for n, (c, spec) in sketches.items():
+        if isinstance(c, str):
+            cols.add(c)
+        elif spec.update_weighted is None:
+            raise ValueError(
+                f"sketch {n!r}: {spec.name} has no weighted update for {c}"
+            )
+        else:
+            cols.update(c)
+    return sorted(cols)
+
+
 _BINCOUNT_MAX = 1 << 21  # counting-pass bound: 2M counts = 16 MB scratch
 
 
@@ -331,21 +375,30 @@ def sorted_and_agg(
 
 def ingest_table(
     sks: dict[str, Any],
-    sketches: dict[str, tuple[str, SketchSpec]],
+    sketches: dict[str, tuple[Any, SketchSpec]],
     tbl: pa.Table | pa.RecordBatch,
 ) -> int:
     """The one per-batch ingest kernel behind every build front end
-    (``partials_df``, the scan path, checkpointed builds, the grouped scan
-    build): update each sketch ``sks[name]`` in place from one Arrow table
-    or batch; returns the number of values extracted.
+    (``partials_df``, the scan path, checkpointed builds, and every grouped
+    build through ``ingest_grouped``): update each sketch ``sks[name]`` in
+    place from one Arrow table or batch; returns the number of values
+    extracted (a pair counts once per kept row).
 
     Each column is extracted once (``_column_values``) and each integer
     column is sorted or counted once (``sorted_and_agg``) for every sketch
     on it. A sketch then takes the cheapest form its spec has:
     ``update_agg`` (unique values, counts), else ``update_sorted`` (the
-    shared sorted array), else ``update`` (raw values)."""
-    cols = sorted({c for c, _ in sketches.values()})
-    vals = {c: _column_values(tbl.column(c)) for c in cols}
+    shared sorted array), else ``update`` (raw values). A ``(value,
+    weight)`` pair column is extracted jointly (``_pair_values``) and feeds
+    ``update_weighted``."""
+    vals: dict[str, np.ndarray] = {}
+    pairs: dict[tuple, tuple[np.ndarray, np.ndarray]] = {}
+    for c, _ in sketches.values():
+        if isinstance(c, str):
+            if c not in vals:
+                vals[c] = _column_values(tbl.column(c))
+        elif c not in pairs:
+            pairs[c] = _pair_values(tbl.column(c[0]), tbl.column(c[1]))
     prep: dict[str, tuple] = {}
     for c, v in vals.items():
         if v.dtype.kind in "iub" and v.shape[0]:
@@ -356,6 +409,10 @@ def ingest_table(
                 any(spec.update_sorted is not None for spec in on_c),
             )
     for n, (c, spec) in sketches.items():
+        if c in pairs:
+            if pairs[c][0].shape[0]:
+                spec.update_weighted(sks[n], *pairs[c])
+            continue
         if not vals[c].shape[0]:
             continue
         sv, agg = prep.get(c, (None, None))
@@ -365,15 +422,82 @@ def ingest_table(
             spec.update_sorted(sks[n], sv)
         else:
             spec.update(sks[n], vals[c])
-    return sum(v.shape[0] for v in vals.values())
+    return sum(v.shape[0] for v in vals.values()) + sum(
+        v.shape[0] for v, _ in pairs.values()
+    )
 
 
-def partials_df(df: DataFrame, sketches: dict[str, tuple[str, SketchSpec]]) -> DataFrame:
+# one NaN object for every NaN group key: tuples compare items by identity
+# first and NaN hashes by identity, so all NaN keys land in one group
+_NAN = float("nan")
+
+
+@dataclass
+class _Group:
+    """One group key's sketches and counts inside a grouped build's task."""
+
+    sks: dict[str, Any]
+    rows: int = 0
+    values_seen: int = 0
+
+
+def ingest_grouped(
+    groups: dict[tuple, _Group],
+    sketches: dict[str, tuple[Any, SketchSpec]],
+    tbl: pa.Table | pa.RecordBatch,
+    key_cols: list[str],
+) -> None:
+    """The one key split behind every grouped build (``build_sketch_grouped``
+    and ``scan.build_sketch_grouped_scan``): feed each key's rows of ``tbl``
+    to ``ingest_table``, accumulating into ``groups`` (key tuple -> its
+    ``_Group``, created on first sight).
+
+    Each key column is dictionary-encoded (a null key and a NaN key each get
+    their own entry, as in Spark's groupBy), the codes are stable-sorted,
+    and the sketched columns are reordered once with Arrow ``take``; each
+    key's rows are then one contiguous slice, in input order. Keys come back
+    as Python values of the column's Arrow type (``None`` for null)."""
+    if tbl.num_rows == 0:
+        return
+    # no update_sorted: a key's slice is small, and KLL keeps a small batch
+    # in arrival order, so a sorted feed would change its state
+    sketches = {
+        n: (c, replace(spec, update_sorted=None)) for n, (c, spec) in sketches.items()
+    }
+    codes, dicts = [], []
+    for c in key_cols:
+        keys = tbl.column(c)
+        if isinstance(keys, pa.ChunkedArray):
+            keys = keys.combine_chunks()
+        if pa.types.is_dictionary(keys.type):  # e.g. written from categoricals
+            keys = keys.dictionary_decode()
+        enc = keys.dictionary_encode(null_encoding="encode")
+        codes.append(enc.indices.to_numpy(zero_copy_only=False))
+        dicts.append([_NAN if k != k else k for k in enc.dictionary.to_pylist()])
+    order = np.lexsort(codes[::-1])  # stable; the first key column leads
+    codes = [cd[order] for cd in codes]
+    starts = np.zeros(len(order), dtype=bool)
+    starts[0] = True
+    for cd in codes:
+        starts[1:] |= cd[1:] != cd[:-1]
+    bounds = np.r_[np.flatnonzero(starts), len(order)].tolist()
+    grouped = tbl.select(_sketch_columns(sketches)).take(order)
+    for lo, hi in zip(bounds[:-1], bounds[1:]):
+        key = tuple(d[cd[lo]] for d, cd in zip(dicts, codes))
+        g = groups.get(key)
+        if g is None:
+            g = groups[key] = _Group({n: spec.make() for n, (_, spec) in sketches.items()})
+        g.values_seen += ingest_table(g.sks, sketches, grouped.slice(lo, hi - lo))
+        g.rows += hi - lo
+
+
+def partials_df(df: DataFrame, sketches: dict[str, tuple[Any, SketchSpec]]) -> DataFrame:
     """Phase 1: one row per input partition with a binary state per sketch
     plus lineage metrics (rows / values seen). Single pass over the data for
     all sketches (shared scan + shared Arrow transfer); every Arrow batch
-    goes through ``ingest_table``, the kernel the scan path uses too."""
-    cols = sorted({c for c, _ in sketches.values()})
+    goes through ``ingest_table``, the kernel the scan path uses too. A
+    ``(value, weight)`` pair column feeds the spec's ``update_weighted``."""
+    cols = _sketch_columns(sketches)
     names = list(sketches.keys())
     sel = df.select(*cols)
 
@@ -404,7 +528,7 @@ def fold_states(states: list[bytes], spec: SketchSpec) -> bytes:
     """Deterministic balanced binary-tree fold of serialized states: sort
     by bytes first (result independent of collection order), then a fixed
     pairing tree (merge is associative-after-sort). The one fold used by
-    every merge path — driver-side, scan-path groupByKey, tree rounds."""
+    every merge path — driver-side, per-key grouped folds, tree rounds."""
     states = sorted(states)
     while len(states) > 1:
         nxt = []
@@ -429,7 +553,7 @@ def merge_partials(
 
 
 def build_sketches(
-    df: DataFrame, sketches: dict[str, tuple[str, SketchSpec]]
+    df: DataFrame, sketches: dict[str, tuple[Any, SketchSpec]]
 ) -> dict[str, Any]:
     """One-pass build of several sketches over a DataFrame; returns
     deserialized final sketch objects keyed by name."""
@@ -441,59 +565,18 @@ def build_sketches(
     return {n: specs[n].from_bytes(merged[n]) for n in names}
 
 
-def build_sketch(df: DataFrame, column: str, spec: SketchSpec) -> Any:
+def build_sketch(df: DataFrame, column: str | tuple[str, str], spec: SketchSpec) -> Any:
     return build_sketches(df, {"s": (column, spec)})["s"]
-
-
-def weighted_digest_partials(
-    df: DataFrame, value_col: str, weight_col: str, delta: float = 0.01
-) -> DataFrame:
-    """Phase 1 of the weighted form of the reference's ingest —
-    ``push(x, n)`` with n != 1 (tdigest.js:82-91) — distributed: one
-    t-digest state per partition built from (value, weight) column pairs
-    in a single Arrow pass. Weighted and unweighted builds share the same
-    merge, so ``merge_partials`` finalizes both."""
-    from ..sketch.tdigest import TDigest
-
-    sel = df.select(value_col, weight_col)
-    out_schema = pa.schema(
-        [pa.field("rows", pa.int64()), pa.field("state_s", pa.binary())]
-    )
-
-    def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import pyarrow.compute as pc
-
-        d = TDigest(delta)
-        rows = 0
-        for batch in batches:
-            vc, wc = batch.column(0), batch.column(1)
-            # nulls must be dropped JOINTLY or the value/weight arrays
-            # misalign — a row contributes only if both sides are present
-            if vc.null_count or wc.null_count:
-                keep = pc.and_(vc.is_valid(), wc.is_valid())
-                vc, wc = vc.filter(keep), wc.filter(keep)
-            v = vc.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
-            w = wc.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
-            if v.shape[0]:
-                d.push(v, w)
-                rows += v.shape[0]
-        yield pa.RecordBatch.from_arrays(
-            [pa.array([rows], pa.int64()), pa.array([d.to_bytes()], pa.binary())],
-            schema=out_schema,
-        )
-
-    return sel.mapInArrow(build, "rows long, state_s binary")
 
 
 def build_weighted_digest(
     df: DataFrame, value_col: str, weight_col: str, delta: float = 0.01
 ) -> Any:
-    """Distributed weighted t-digest: quantiles/CDF of the value column
-    where each row carries ``weight_col`` mass."""
-    spec = _mk_tdigest(delta)
-    rows = weighted_digest_partials(df, value_col, weight_col, delta).collect()
-    merged = merge_partials(rows, ["s"], {"s": spec})
-    return spec.from_bytes(merged["s"])
+    """Distributed weighted t-digest — the reference's ``push(x, n)`` with
+    n != 1 (tdigest.js:82-91): quantiles/CDF of the value column where each
+    row carries ``weight_col`` mass; a row with a null on either side is
+    dropped."""
+    return build_sketch(df, (value_col, weight_col), _mk_tdigest(delta))
 
 
 def build_weighted_digest_grouped(
@@ -504,35 +587,15 @@ def build_weighted_digest_grouped(
     delta: float = 0.01,
 ) -> DataFrame:
     """Grouped form of the weighted ingest (VERDICT r3 item 6): one
-    weighted t-digest per key, two-phase like ``build_sketch_grouped`` —
-    per-(partition, key) partials built in a vectorized pandas pass, then
-    only O(16 KB) states shuffle to the per-key deterministic fold. Raw
-    rows never shuffle, so weighted quantile monitoring composes with the
+    weighted t-digest per key through ``build_sketch_grouped``, so raw rows
+    never shuffle and weighted quantile monitoring composes with the
     grouped shape at 100 TB (exchange = #partitions x #keys x state size).
 
     Returns DataFrame[group_cols..., state binary, rows long] — ``rows``
     counts the (value, weight) pairs with both sides non-null; states
     deserialize with ``TDigest.from_bytes``."""
-    import pandas as pd
-
-    def push(sk: Any, sub: "pd.DataFrame") -> int:
-        # value/weight nulls must drop JOINTLY (same rule as the global
-        # weighted_digest_partials) or the arrays misalign
-        v = pd.to_numeric(sub[value_col], errors="coerce").to_numpy(
-            np.float64, copy=False
-        )
-        w = pd.to_numeric(sub[weight_col], errors="coerce").to_numpy(
-            np.float64, copy=False
-        )
-        keep = ~(np.isnan(v) | np.isnan(w))
-        if not keep.all():
-            v, w = v[keep], w[keep]
-        if v.shape[0]:
-            sk.push(v, w)
-        return v.shape[0]
-
-    return _grouped_states(
-        df, group_cols, [value_col, weight_col], _mk_tdigest(delta), push
+    return build_sketch_grouped(
+        df, group_cols, (value_col, weight_col), _mk_tdigest(delta)
     )
 
 
@@ -583,112 +646,69 @@ def tree_merge_states(
     return out
 
 
-def _grouped_states(
+def build_sketch_grouped(
     df: DataFrame,
     group_cols: list[str],
-    value_cols: list[str],
+    column: str | tuple[str, str],
     spec: SketchSpec,
-    ingest: Callable[[Any, Any], int],
 ) -> DataFrame:
-    """The grouped two-phase skeleton shared by ``build_sketch_grouped``
-    and ``build_weighted_digest_grouped``: a mapInPandas pass keeps one
-    ``spec`` sketch per (partition, key), fed by ``ingest(sketch, sub)``
-    for each key's pandas sub-frame of a batch, which returns the rows it
-    counts; then ``groupBy(keys).applyInPandas`` folds each key's states
-    with ``fold_states``. Raw rows never shuffle — at 100 TB the exchange
-    moves #partitions × #keys × O(16 KB), not the data.
+    """Grouped two-phase aggregate: one sketch per key. A mapInArrow pass
+    keeps one sketch per (partition, key), fed through ``ingest_grouped``
+    batch by batch; then ``groupBy(keys).applyInArrow`` folds each key's
+    states with ``fold_states``. Raw rows never shuffle — at 100 TB the
+    exchange moves #partitions × #keys × O(16 KB), not the data.
 
-    Returns DataFrame[group_cols..., state binary, rows long] — group keys
-    keep their NATIVE Spark types (round 1 stringified them, losing key
-    types on output)."""
-    import pandas as pd
-
-    sel = df.select(*group_cols, *value_cols)
-    part_schema = (
+    Returns DataFrame[group_cols..., state binary, rows long]. Group keys
+    keep their NATIVE Spark types; a null key and a NaN key are groups of
+    their own, as in Spark's groupBy. ``rows`` counts every row of the key,
+    null values included — for a ``(value, weight)`` pair ``column``, only
+    the rows with both sides non-null."""
+    sketches = {"s": (column, spec)}
+    sel = df.select(*group_cols, *_sketch_columns(sketches))
+    schema = (
         ", ".join(
             f"{c} {df.schema[c].dataType.simpleString()}" for c in group_cols
         )
         + ", state binary, rows long"
     )
+    weighted = not isinstance(column, str)
 
-    def partial(pdfs: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        # sketches keyed by group tuple, accumulated across all batches of
-        # this partition; grouping itself is pandas-vectorized (hash groupby)
-        acc: dict[tuple, Any] = {}
-        counts: dict[tuple, int] = {}
-        for pdf in pdfs:
-            # dropna=False: a NULL group key is a real group (Spark's own
-            # groupBy keeps it; pandas' default silently drops the rows)
-            for kr, sub in pdf.groupby(group_cols, sort=False, dropna=False):
-                if not isinstance(kr, tuple):
-                    kr = (kr,)
-                if kr not in acc:
-                    acc[kr] = spec.make()
-                    counts[kr] = 0
-                counts[kr] += ingest(acc[kr], sub)
-        if acc:
-            ks = list(acc.keys())
-            out = {
-                # null group keys (None, or NaN from pandas' null coding)
-                # stay NULL in the output — Spark's groupBy keeps the null
-                # group in the merge phase, same as its own aggregations;
-                # non-null keys pass through with their native values
-                c: [
-                    None if (k[i] is None or k[i] != k[i]) else k[i]
-                    for k in ks
-                ]
-                for i, c in enumerate(group_cols)
-            }
-            out["state"] = [acc[k].to_bytes() for k in ks]
-            out["rows"] = [counts[k] for k in ks]
-            yield pd.DataFrame(out)
+    def partial(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        groups: dict[tuple, _Group] = {}
+        for batch in batches:
+            key_types = [batch.schema.field(c).type for c in group_cols]
+            ingest_grouped(groups, sketches, batch, group_cols)
+        if groups:
+            out = [
+                pa.array([k[i] for k in groups], t) for i, t in enumerate(key_types)
+            ]
+            out.append(
+                pa.array([g.sks["s"].to_bytes() for g in groups.values()], pa.binary())
+            )
+            out.append(
+                pa.array(
+                    [g.values_seen if weighted else g.rows for g in groups.values()],
+                    pa.int64(),
+                )
+            )
+            yield pa.RecordBatch.from_arrays(out, names=[*group_cols, "state", "rows"])
 
-    parts = sel.mapInPandas(partial, part_schema)
-
-    def final_merge(pdf: "pd.DataFrame") -> "pd.DataFrame":
+    def final_merge(t: pa.Table) -> pa.Table:
         # shared deterministic balanced fold: O(log P) recompression depth
         # per key (a linear left fold recompresses O(P) times sequentially)
-        merged = fold_states([bytes(b) for b in pdf["state"]], spec)
-        out = {c: [pdf[c].iloc[0]] for c in group_cols}
-        out["state"] = [merged]
-        out["rows"] = [int(pdf["rows"].sum())]
-        return pd.DataFrame(out)
+        merged = fold_states(t.column("state").to_pylist(), spec)
+        return (
+            t.select(group_cols)
+            .slice(0, 1)
+            .append_column("state", pa.array([merged], pa.binary()))
+            .append_column("rows", pa.array([sum(t.column("rows").to_pylist())], pa.int64()))
+        )
 
-    return parts.groupBy(*group_cols).applyInPandas(final_merge, part_schema)
-
-
-def build_sketch_grouped(
-    df: DataFrame,
-    group_cols: list[str],
-    column: str,
-    spec: SketchSpec,
-) -> DataFrame:
-    """Grouped two-phase aggregate (see ``_grouped_states``): one sketch
-    per key, built per (partition, key) from vectorized pandas groups, then
-    only the tiny states shuffle to a per-key merge.
-
-    Returns DataFrame[group_cols..., state binary, rows long] — ``rows``
-    counts every row of the key, null values included."""
-    is_list = df.schema[column].dataType.typeName() == "array"
-
-    def update(sk: Any, sub: "pd.DataFrame") -> int:
-        if is_list:
-            arrs = [a for a in sub[column].to_numpy() if a is not None]
-            vals = np.concatenate(arrs) if arrs else np.empty(0)
-        else:
-            vals = sub[column].to_numpy()
-            if vals.dtype.kind == "f":
-                # nullable numerics arrive as float64 + NaN; the batch path
-                # drops nulls (_column_values) — the grouped path must
-                # match or results diverge
-                vals = vals[~np.isnan(vals)]
-            elif vals.dtype == object:
-                vals = np.asarray([v for v in vals if v is not None], dtype=object)
-        if vals.shape[0]:
-            spec.update(sk, vals)
-        return len(sub)
-
-    return _grouped_states(df, group_cols, [column], spec, update)
+    return (
+        sel.mapInArrow(partial, schema)
+        .groupBy(*group_cols)
+        .applyInArrow(final_merge, schema)
+    )
 
 
 def _mk_bottomk(k: int = 1024, strings: bool = False):

@@ -29,12 +29,17 @@ performance path for sketching columns straight off a parquet/Iceberg table.
 from __future__ import annotations
 
 import time
-from dataclasses import dataclass, replace
+from dataclasses import dataclass
 from typing import Any, Iterable, Iterator
 
-import numpy as np
-
-from .aggregate import SketchSpec, fold_states, ingest_table, merge_partials
+from .aggregate import (
+    SketchSpec,
+    _sketch_columns,
+    fold_states,
+    ingest_grouped,
+    ingest_table,
+    merge_partials,
+)
 
 __all__ = [
     "parquet_splits",
@@ -127,7 +132,7 @@ def _ingest_splits(
     Returns the partial row: ``rows``, ``values_seen``, ``n_splits``,
     ``wall_ms``, per-split ``lineage`` (path, row groups, rows, wall_ms)
     and a serialized ``state_<name>`` per sketch."""
-    cols = sorted({c for c, _ in sketches.values()})
+    cols = _sketch_columns(sketches)
     sks = {n: spec.make() for n, (_, spec) in sketches.items()}
     rows = values_seen = 0
     lineage: list[dict] = []
@@ -229,13 +234,12 @@ def build_sketch_grouped_scan(
     """Grouped sketch build on the scan-in-worker fast path, in ONE Spark
     stage.
 
-    Each task reads its row-group splits with pyarrow, dictionary-encodes
-    the key column, stable-argsorts the integer codes and reorders the value
-    column once with Arrow ``take``; each key's rows are then one contiguous
-    slice, fed to the shared ``ingest_table`` kernel (null elements and
-    null list rows contribute nothing). The
-    task keeps ONE sketch per key for its whole partition and returns only
-    (key, state) pairs — #partitions x #keys x O(state) bytes, never rows.
+    Each task reads its row-group splits with pyarrow and feeds every split
+    to the shared key split ``aggregate.ingest_grouped`` — the one the
+    DataFrame grouped build uses too (null elements and null list rows
+    contribute nothing). The task keeps ONE sketch per key for its whole
+    partition and returns only (key, state) pairs — #partitions x #keys x
+    O(state) bytes, never rows.
 
     The pairs are collected and folded per key on the driver with
     ``fold_states`` (byte-sorted, so the result is independent of task
@@ -253,41 +257,12 @@ def build_sketch_grouped_scan(
     splits = parquet_splits(paths, target_rows_per_split)
 
     def run_partition(it: Iterator[_Split]) -> Iterator[tuple[str | None, bytes]]:
-        import pyarrow as pa
-
-        # no update_sorted: a key's slice is small, and KLL keeps a small
-        # batch in arrival order, so a sorted feed would change its state
-        one = {"v": (column, replace(spec, update_sorted=None))}
-        sks: dict[str | None, Any] = {}
+        one = {"v": (column, spec)}
+        groups: dict = {}
         for sp in it:
-            tbl = _read_split(sp, [group_col, column])
-            if tbl.num_rows == 0:
-                continue  # empty part file -> empty split (valid input)
-            keys = tbl.column(group_col).combine_chunks()
-            if pa.types.is_dictionary(keys.type):  # e.g. written from categoricals
-                keys = keys.dictionary_decode()
-            # null_encoding="encode": a null key gets its own dictionary
-            # entry, so it groups like any other key
-            enc = keys.dictionary_encode(null_encoding="encode")
-            codes = enc.indices.to_numpy(zero_copy_only=False)
-            # stable: each key's rows keep their file order, so its sketch
-            # sees the same value sequence as a plain per-key scan
-            order = np.argsort(codes, kind="stable")
-            sorted_codes = codes[order]
-            bounds = np.flatnonzero(
-                np.r_[True, sorted_codes[1:] != sorted_codes[:-1]]
-            )
-            bounds = np.r_[bounds, len(sorted_codes)]
-            grouped = tbl.select([column]).take(order)
-            dict_keys = enc.dictionary.to_pylist()
-            for lo, hi in zip(bounds[:-1].tolist(), bounds[1:].tolist()):
-                k = dict_keys[sorted_codes[lo]]
-                key = None if k is None else str(k)
-                if key not in sks:
-                    sks[key] = spec.make()
-                ingest_table({"v": sks[key]}, one, grouped.slice(lo, hi - lo))
-        for key, sk in sks.items():
-            yield (key, sk.to_bytes())
+            ingest_grouped(groups, one, _read_split(sp, [group_col, column]), [group_col])
+        for (k,), g in groups.items():
+            yield (None if k is None else str(k), g.sks["v"].to_bytes())
 
     sc = spark.sparkContext
     if partitions is None:

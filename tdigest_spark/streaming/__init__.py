@@ -513,32 +513,6 @@ def dedup_stream(stream_df, id_cols: list[str], ts_col: str, delay: str = "1 hou
 # ---------------------------------------------------------------------------
 
 
-def _flat_values(series) -> "np.ndarray":
-    """pandas value column -> flat numpy values, matching the batch path's
-    ``_column_values`` semantics (operators/aggregate.py): null rows are
-    dropped, ``array<T>`` rows are flattened, strings stay an object
-    array. The naive ``np.concatenate`` over an object column crashes on
-    scalar strings / None rows (0-d arrays), and NaN from nullable
-    numerics must never reach int-keyed sketch hashes."""
-    import pandas as pd
-
-    vals = series.to_numpy()
-    if vals.dtype != object:
-        if vals.dtype.kind == "f":
-            return vals[~np.isnan(vals)]
-        return vals
-    items = [v for v in vals if v is not None and v is not pd.NA]
-    if not items:
-        return np.empty(0, dtype=np.float64)
-    first = items[0]
-    if isinstance(first, str):
-        return np.asarray(items, dtype=object)
-    if np.ndim(first) == 0:
-        arr = np.asarray(items, dtype=np.float64)
-        return arr[~np.isnan(arr)]
-    return np.concatenate([np.asarray(v) for v in items])
-
-
 def _read_state_rows(state_dir) -> list[dict] | None:
     """Rows of the durable state table, or None if absent. Path-or-URI:
     routed through pyarrow.fs (plans/fsio) so state dirs work on object
@@ -664,11 +638,14 @@ def windowed_digests(
     digest state; closed windows are emitted and evicted by timeout.
     """
     import pandas as pd
+    import pyarrow as pa
     from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import (
         GroupState,
         GroupStateTimeout,
     )
+
+    from ..operators.aggregate import _column_values
 
     if slide_seconds is None:
         slide_seconds = window_seconds
@@ -724,7 +701,9 @@ def windowed_digests(
         else:
             sk, n = spec.make(), 0
         for pdf in pdfs:
-            arr = _flat_values(pdf["_val"])
+            # back to Arrow, then the batch path's extraction: null rows
+            # and elements drop, list rows flatten, strings stay objects
+            arr = _column_values(pa.Array.from_pandas(pdf["_val"]))
             if arr.shape[0]:
                 spec.update(sk, arr)
                 n += arr.shape[0]
@@ -781,49 +760,35 @@ def incremental_build_grouped(
     plus the batch high-water mark for exactly-once replay handling.
     Rollups stay free: merging the per-key states yields the global digest
     (sketch mergeability)."""
-    import pyarrow as pa
     from ..operators.aggregate import build_sketch_grouped
 
     state_dir = str(state_dir)
 
     def process(batch_df, batch_id: int) -> None:
-        prev: dict[str, dict] = {}
-        prev_batch = -1
-        prev_rows = _read_state_rows(state_dir)
-        if prev_rows is not None:
-            for r in prev_rows:
-                prev[r["key"]] = r
-                prev_batch = max(prev_batch, r["batch_id"])
-            if prev_batch >= batch_id:
+        prev: dict[str | None, dict] = {}
+        rows0 = _read_state_rows(state_dir)
+        if rows0:
+            if max(r["batch_id"] for r in rows0) >= batch_id:
                 return  # replayed batch already merged
-        parts = build_sketch_grouped(
-            batch_df, [group_col], column, spec
-        ).collect()
-        merged: dict[str, tuple[bytes, int]] = {}
-        for r in sorted(parts, key=lambda r: r[group_col]):
-            key = str(r[group_col])
-            state, rows = bytes(r["state"]), int(r["rows"])
-            if key in merged:
-                state = spec.merge_bytes(merged[key][0], state)
-                rows += merged[key][1]
-            merged[key] = (state, rows)
+            prev = {r["key"]: r for r in rows0}
+        # build_sketch_grouped emits one row per key; a null key stays
+        # None, apart from a real "None" key
+        new = {
+            None if r[group_col] is None else str(r[group_col]): r
+            for r in build_sketch_grouped(
+                batch_df, [group_col], column, spec
+            ).collect()
+        }
         out_rows = []
-        keys = set(prev) | set(merged)
-        for key in sorted(keys):
-            if key in prev and key in merged:
-                state = spec.merge_bytes(
-                    bytes(prev[key]["state"]), merged[key][0]
-                )
-                rows = prev[key]["rows"] + merged[key][1]
-            elif key in merged:
-                state, rows = merged[key]
-            else:
-                state, rows = bytes(prev[key]["state"]), prev[key]["rows"]
+        for key in sorted(set(prev) | set(new), key=lambda k: (k is not None, k)):
+            p, n = prev.get(key), new.get(key)
             out_rows.append(
                 {
                     "key": key,
-                    "state": state,
-                    "rows": rows,
+                    "state": spec.merge_bytes(
+                        p and bytes(p["state"]), n and bytes(n["state"])
+                    ),
+                    "rows": (p["rows"] if p else 0) + (n["rows"] if n else 0),
                     "batch_id": batch_id,
                     "updated_at": time.time(),
                 }

@@ -441,3 +441,48 @@ def test_grouped_dataframe_states_pinned(spark, build):
         for r in out.collect()
     )
     assert hashlib.sha256(json.dumps(got).encode()).hexdigest() == GROUPED_DF_SHA256[build]
+
+
+def test_grouped_builds_keep_large_bigints_and_nan_keys(spark):
+    """Grouped builds read values as Arrow: a nullable bigint above 2**53
+    reaches HLL, CMS and Bloom as the same int64 the global build hashes
+    (a float64 detour rounds it), so each per-key state is byte-equal to
+    ``build_sketches`` over the same rows. A double key holding NaN and
+    null gives two groups, as Spark's own groupBy does."""
+    import math
+
+    base = 1 << 60
+    rows = [("k", None if i % 9 == 0 else base + i * 7919) for i in range(1_600)]
+    df = spark.createDataFrame(rows, "g string, v bigint").coalesce(1)
+    specs = {"hll": HLL_INTS(12), "cms": CMS_INTS(), "bloom": BLOOM_INTS(5_000, 0.01)}
+    want = build_sketches(df, {n: ("v", s) for n, s in specs.items()})
+    for n, spec in specs.items():
+        (r,) = build_sketch_grouped(df, ["g"], "v", spec).collect()
+        assert r["g"] == "k" and r["rows"] == 1_600
+        assert bytes(r["state"]) == want[n].to_bytes(), n
+
+    nan = float("nan")
+    keyed = spark.createDataFrame(
+        [(nan, 1.0), (None, 2.0), (nan, 3.0), (1.0, 4.0), (None, 5.0), (nan, 6.0)],
+        "k double, v double",
+    )
+    spark_groups = {
+        "nan" if r["k"] is not None and math.isnan(r["k"]) else r["k"]: r["count"]
+        for r in keyed.groupBy("k").count().collect()
+    }
+    assert spark_groups == {"nan": 3, None: 2, 1.0: 1}
+    got = {}
+    for r in build_sketch_grouped(keyed, ["k"], "v", TDIGEST(0.01)).collect():
+        k = "nan" if r["k"] is not None and math.isnan(r["k"]) else r["k"]
+        got[k] = (r["rows"], TDigest.from_bytes(bytes(r["state"])).n)
+    assert got == {k: (c, c) for k, c in spark_groups.items()}
+
+
+def test_weighted_pair_needs_a_weighted_spec(spark):
+    """Only a spec with ``update_weighted`` (TDIGEST) takes a (value,
+    weight) pair column; any other fails on the driver before a job runs."""
+    df = spark.createDataFrame([(1.0, 2.0)], "v double, w double")
+    with pytest.raises(ValueError, match="weighted"):
+        build_sketch(df, ("v", "w"), HLL_INTS(12))
+    with pytest.raises(ValueError, match="weighted"):
+        build_sketch_grouped(df, ["v"], ("v", "w"), KLL_SPEC(200))

@@ -187,6 +187,101 @@ def test_incremental_grouped_per_key(spark, dirs):
     }
 
 
+def test_incremental_grouped_null_key(spark, dirs):
+    """A null group key keeps its own per-key state, stored as a null
+    ``key`` and read back as ``None``; it never collides with a real
+    "None" string key, and it survives a second micro-batch run."""
+    from tdigest_spark.streaming import (
+        incremental_build_grouped,
+        read_state_grouped,
+    )
+
+    spec = TDIGEST(0.01)
+    schema = "ts timestamp, source string, value double"
+
+    def write(name, keys):
+        n = len(keys)
+        dirs["in"].mkdir(parents=True, exist_ok=True)
+        pq.write_table(
+            pa.table(
+                {
+                    "ts": pa.array([1_700_000_000_000_000] * n).cast(
+                        pa.timestamp("us")
+                    ),
+                    "source": pa.array(keys, pa.string()),
+                    "value": pa.array(np.arange(n, dtype=np.float64)),
+                }
+            ),
+            dirs["in"] / f"{name}.parquet",
+        )
+
+    def run():
+        stream = spark.readStream.schema(schema).parquet(str(dirs["in"]))
+        q = incremental_build_grouped(
+            stream, "source", "value", spec, dirs["state"], dirs["ckpt"]
+        )
+        q.awaitTermination(120)
+        assert q.exception() is None
+        return read_state_grouped(dirs["state"], spec)
+
+    write("a", ["web", None, "None", None, "web", "web"])
+    st = run()
+    assert {k: int(v.n) for k, v in st.items()} == {"web": 3, None: 2, "None": 1}
+    write("b", [None, "code", None])
+    st = run()
+    assert {k: int(v.n) for k, v in st.items()} == {
+        "web": 3,
+        None: 4,
+        "None": 1,
+        "code": 1,
+    }
+
+
+def test_windowed_digests_list_values(spark, tmp_path):
+    """An ``array<bigint>`` value column is flattened like the batch path:
+    null rows and null elements contribute nothing, and each window's
+    digest equals a batch digest of the same flattened values."""
+    from tdigest_spark.operators.aggregate import build_sketch
+
+    ind = tmp_path / "list_in"
+    ind.mkdir(parents=True)
+    t0 = 1_700_000_000
+    vals = [[1, 2, 3], None, [4, None, 5], [], [6], [7, 8], None, [9, 10, 11]]
+    n = len(vals)
+    pq.write_table(
+        pa.table(
+            {
+                "ts": pa.array(
+                    ((t0 + np.arange(n) * 60) * 1_000_000).astype("int64")
+                ).cast(pa.timestamp("us")),
+                "k": pa.array(["a", "b"] * (n // 2)),
+                "v": pa.array(vals, pa.list_(pa.int64())),
+            }
+        ),
+        ind / "f.parquet",
+    )
+    stream = spark.readStream.schema(
+        "ts timestamp, k string, v array<bigint>"
+    ).parquet(str(ind))
+    out = windowed_digests(stream, "ts", "k", "v", TDIGEST(0.01), 3600)
+    qn = f"listwin_{int(time.time() * 1000)}"
+    q = (
+        out.writeStream.format("memory").queryName(qn)
+        .outputMode("update").trigger(availableNow=True).start()
+    )
+    q.awaitTermination(300)
+    rows = spark.table(qn).toPandas().drop_duplicates(
+        subset=["key", "window_start"], keep="last"
+    )
+    batch = spark.read.parquet(str(ind))
+    assert sorted(rows["key"]) == ["a", "b"]
+    for _, r in rows.iterrows():
+        want = build_sketch(batch.where(batch.k == r["key"]), "v", TDIGEST(0.01))
+        assert int(r["n"]) == int(want.n)
+        assert bytes(r["state"]) == want.to_bytes()
+    assert sorted(rows["n"]) == [5, 6]
+
+
 def test_sliding_windowed_digests(spark, dirs):
     """slide = window/2: every event lands in exactly 2 windows; per-window
     counts match the exact overlapping-window groupby."""

@@ -329,6 +329,9 @@ AUDITS = {
     # benford: ONE pruned scan into a checkpointed 9-row digit agg;
     # total/chi2 come back as keyless broadcast nested-loop (not BHJ)
     "orders_benford_audit": (0, True, False),
+    # grouped digests: pruned 2-col scan, map-side partial states, one
+    # state-only shuffle to the per-key fold, no join
+    "grouped_digest_functions": (0, True, False),
 }
 
 # queries whose scan must show directory-level partition pruning: a
