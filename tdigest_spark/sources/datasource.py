@@ -122,34 +122,22 @@ def arrow_schema_to_ddl(schema) -> str:
 
 
 class _FilePartition(InputPartition):
-    """One data file plus the delete files that apply to it (resolved at
-    PLAN time against the pinned snapshot): ``pos_deletes`` are v2
-    position-delete parquets (file_path, pos) possibly covering many data
-    files; ``eq_deletes`` are ``(path, key_map)`` pairs — equality-delete
-    parquets whose sequence number is STRICTLY GREATER than this file's
-    (the spec rule — a key re-inserted by a later append survives), with
-    the field-id rename map that projects their key columns onto the
-    table's current schema. ``mapping`` is the file's own field-id
-    projection onto the current schema (``None`` for schema-less tables:
-    raw batches)."""
+    """One data file plus the deletes that apply to it (resolved at PLAN
+    time against the pinned snapshot): ``positions`` are its tombstoned
+    row positions, sorted — DVs and v2 position deletes merged on the
+    driver by ``iceberg.tombstones``; ``eq_deletes`` are ``(path,
+    key_map)`` pairs — equality-delete parquets whose sequence number is
+    STRICTLY GREATER than this file's (the spec rule — a key re-inserted by
+    a later append survives), with the field-id rename map that projects
+    their key columns onto the table's current schema. ``mapping`` is the
+    file's own field-id projection onto the current schema (``None`` for
+    schema-less tables: raw batches)."""
 
-    def __init__(
-        self, path: str, pos_deletes=(), eq_deletes=(), mapping=None, dvs=()
-    ):
+    def __init__(self, path: str, positions=(), eq_deletes=(), mapping=None):
         self.path = path
-        self.pos_deletes = tuple(pos_deletes)
+        self.positions = tuple(positions)
         self.eq_deletes = tuple(eq_deletes)
         self.mapping = mapping
-        # v3 deletion-vector blob(s) referencing THIS file (≤1 when
-        # written by delete_where_dv — the supersede rule)
-        self.dvs = tuple(dvs)
-
-
-def _norm_path(p: str) -> str:
-    """file:///x, file:/x and /x all spell the same local file."""
-    import re
-
-    return re.sub(r"^file:/+", "/", str(p))
 
 
 def _read_parquet_batches(path: str):
@@ -228,42 +216,29 @@ def _resolve_key_table(path: str, key_map):
 
 
 def _read_partition_mor(partition: _FilePartition):
-    """Merge-on-read of one data file: subtract this file's tombstoned
-    ROW POSITIONS (position deletes are per original row index, so they
-    apply BEFORE anything reorders rows), project onto the current schema
-    by field id, then anti-join each batch against the applicable
+    """Merge-on-read of one data file: drop this file's tombstoned ROW
+    POSITIONS (position deletes are per original row index, so they apply
+    BEFORE anything reorders rows), project onto the current schema by
+    field id, then anti-join each batch against the applicable
     equality-delete key sets (themselves field-id-resolved, so evolution
-    composes). Delete files are tiny next to the data they tombstone —
-    per-task re-reads are the same cost shape as the broadcast a JVM
-    Iceberg planner uses."""
+    composes). Equality-delete key sets are tiny next to the data they
+    tombstone — per-task re-reads are the same cost shape as the broadcast
+    a JVM Iceberg planner uses."""
     import numpy as np
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    pos: set = set()
-    me = _norm_path(partition.path)
-    if getattr(partition, "dvs", ()):
-        from .iceberg import read_deletion_vector
-
-        for dvp in partition.dvs:
-            pos.update(read_deletion_vector(dvp))
-    for dp in partition.pos_deletes:
-        t = pq.read_table(dp, columns=["file_path", "pos"], use_threads=False)
-        fps = t.column("file_path").to_pylist()
-        ps = t.column("pos").to_pylist()
-        pos.update(p for f, p in zip(fps, ps) if _norm_path(f) == me)
+    pos = np.asarray(partition.positions, dtype=np.int64)
     keys = [
         _resolve_key_table(dp, key_map) for dp, key_map in partition.eq_deletes
     ]
     offset = 0
     for batch in _read_parquet_batches(partition.path):
         n = batch.num_rows
-        if pos:
+        lo, hi = np.searchsorted(pos, [offset, offset + n])
+        if hi > lo:
             mask = np.ones(n, dtype=bool)
-            hit = [p - offset for p in pos if offset <= p < offset + n]
-            if hit:
-                mask[hit] = False
-                batch = batch.take(pa.array(np.nonzero(mask)[0]))
+            mask[pos[lo:hi] - offset] = False
+            batch = batch.filter(pa.array(mask))
         offset += n
         if partition.mapping is not None:
             batch = _project_batch(batch, partition.mapping)
@@ -286,11 +261,7 @@ def _read_partition(partition: _FilePartition | None):
     # empty partition list, so None means "empty result", not a bug
     if partition is None:
         return
-    if (
-        partition.pos_deletes
-        or partition.eq_deletes
-        or getattr(partition, "dvs", ())
-    ):
+    if partition.positions or partition.eq_deletes:
         yield from _read_partition_mor(partition)
     elif partition.mapping is not None:
         for batch in _read_parquet_batches(partition.path):
@@ -332,10 +303,9 @@ def _plan_file_partitions(root, predicates, snapshot_id):
     return [
         _FilePartition(
             p["path"],
-            p["pos_deletes"],
+            p["positions"],
             [(dp, rn(dsid)) for dp, dsid in p["eq_deletes"]],
             mapping=ev(p["schema_id"]),
-            dvs=p.get("dvs", ()),
         )
         for p in plan
     ]
@@ -782,8 +752,10 @@ class _StaticIcebergStreamReader(DataSourceStreamReader):
         from .iceberg import (
             current_metadata,
             evolution_mapping,
+            file_key,
             iceberg_incremental_paths,
             iceberg_scan_entries_static,
+            tombstones,
         )
 
         lo, hi = int(start["snapshot_id"]), int(end["snapshot_id"])
@@ -801,11 +773,10 @@ class _StaticIcebergStreamReader(DataSourceStreamReader):
         # before `lo` are not retracted, Iceberg's own incremental-scan
         # limitation); snapshot `lo` must still be retained, i.e.
         # expiration policy keeps consumers' offsets. WITHIN the range,
-        # though, position deletes committed in (lo, hi] attach to the
-        # added files (the reader filters by file_path, so a delete
-        # aimed at an older file is a no-op here) — a row added and then
-        # pos-deleted inside one range never existed at offset `hi` and
-        # must not be emitted as live.
+        # though, position deletes and DVs committed in (lo, hi] apply to
+        # the added files (a delete aimed at an older file is a no-op
+        # here) — a row added and then deleted inside one range never
+        # existed at offset `hi` and must not be emitted as live.
         paths = iceberg_incremental_paths(self.root, lo, hi)
         meta = current_metadata(self.root)
         snaps = {
@@ -815,28 +786,18 @@ class _StaticIcebergStreamReader(DataSourceStreamReader):
         lo_seq, hi_seq = snaps.get(lo, 0), snaps.get(hi, 0)
         entries = iceberg_scan_entries_static(self.root, snapshot_id=hi)
         sid_of = {e["path"]: e.get("schema_id") for e in entries["data"]}
-        range_pos = tuple(
-            e["path"]
-            for e in entries["pos_deletes"]
-            if lo_seq < e["seq"] <= hi_seq
+        tomb = tombstones(
+            {
+                k: [e for e in entries[k] if lo_seq < e["seq"] <= hi_seq]
+                for k in ("pos_deletes", "dvs")
+            },
+            self.root,
         )
-        # same within-range rule for v3 deletion vectors: a DV committed
-        # in (lo, hi] attaches to the range-added file it references.
-        # DV 'referenced' keys are resolve()d at write time — resolve the
-        # candidate path too, or a symlinked/non-canonical table root
-        # silently misses the DV and resurrects its deleted rows
-        range_dvs: dict[str, list[str]] = {}
-        for e in entries.get("dvs", ()):
-            if lo_seq < e["seq"] <= hi_seq:
-                range_dvs.setdefault(e["referenced"], []).append(e["path"])
         return [
             _FilePartition(
                 p,
-                pos_deletes=range_pos,
+                sorted(tomb.get(file_key(p, self.root), ())),
                 mapping=evolution_mapping(meta, sid_of.get(p)),
-                dvs=range_dvs.get(
-                    _norm_path(str(Path(str(p)).resolve())), ()
-                ),
             )
             for p in paths
         ]

@@ -54,6 +54,8 @@ __all__ = [
     "decode_deletion_vector",
     "read_deletion_vector",
     "deletion_vector_positions",
+    "file_key",
+    "tombstones",
     "read_with_lineage",
 ]
 
@@ -126,16 +128,58 @@ def read_deletion_vector(path) -> list[int]:
 
 
 def deletion_vector_positions(entries: dict) -> dict[str, set]:
-    """Map (normalized referenced data path) -> deleted row positions from a
-    snapshot's live DV entries (``entries`` from
+    """Map :func:`file_key` of the referenced data file -> deleted row
+    positions from a snapshot's live DV entries (``entries`` from
     :func:`iceberg_scan_entries_static`). DVs are tiny next to the data they
-    tombstone, so driver-side decode is the right cost model — the same
-    reason the v2 pos-delete path broadcasts."""
+    tombstone, so driver-side decode is the right cost model."""
     out: dict[str, set] = {}
     for e in entries.get("dvs", ()):
         out.setdefault(e["referenced"], set()).update(
             read_deletion_vector(e["path"])
         )
+    return out
+
+
+def file_key(uri, table_root) -> str:
+    """THE identity of a table file: re-root a stored URI onto this table
+    (:func:`_localize`), then resolve symlinks, giving a plain absolute
+    path. Every comparison of one file spelling against another — data
+    files, delete targets, DV references, lineage, orphans, stats files —
+    goes through this key (or its Spark twin, :func:`_file_key_expr`);
+    what the writer STORES keeps its own spelling."""
+    return str(Path(_localize(str(uri), Path(str(table_root)))).resolve())
+
+
+def _file_key_expr():
+    """:func:`file_key`'s twin over Spark's ``_metadata.file_path``, a URI
+    (``file:/x``, a space as ``%20``): strip the scheme and percent-decode
+    (a literal ``+`` is escaped first, as ``url_decode`` reads it as a
+    space). A scan that opened its files by ``file_key`` reads back that
+    same key."""
+    from pyspark.sql import functions as F
+
+    path = F.regexp_replace(F.col("_metadata.file_path"), "^file:/+", "/")
+    return F.url_decode(F.regexp_replace(path, "[+]", "%2B"))
+
+
+def tombstones(entries: dict, table_root) -> dict[str, set]:
+    """``{file_key: deleted row positions}`` of a snapshot's position-keyed
+    deletes: its DV blobs merged with its v2 position-delete rows, each
+    row's ``file_path`` keyed through :func:`file_key`. ``entries`` is
+    :func:`iceberg_scan_entries_static` output (or any subset of its
+    ``pos_deletes`` / ``dvs`` lists). The one reader of delete files:
+    deletes are tiny next to the data they tombstone, so the driver reads
+    them once and ships positions."""
+    import pyarrow.parquet as pq
+
+    out = deletion_vector_positions(entries)
+    keys: dict[str, str] = {}
+    for e in entries.get("pos_deletes", ()):
+        t = pq.read_table(e["path"], columns=["file_path", "pos"], use_threads=False)
+        for fp, pos in zip(t["file_path"].to_pylist(), t["pos"].to_pylist()):
+            if fp not in keys:
+                keys[fp] = file_key(fp, table_root)
+            out.setdefault(keys[fp], set()).add(int(pos))
     return out
 
 
@@ -177,19 +221,13 @@ def read_sequences(
                 f"Iceberg table {source!r} has no committed snapshot "
                 "(no data files to read)"
             )
-        pos_paths = [x["path"] for x in entries["pos_deletes"]]
-        dv_pairs = [
-            (ref, p)
-            for ref, ps in sorted(deletion_vector_positions(entries).items())
-            for p in sorted(ps)
-        ]
-        eqs = entries["eq_deletes"]
-        if not eqs:
-            df = spark.read.parquet(*[x["path"] for x in entries["data"]])
-            if pos_paths or dv_pairs:
-                df = _apply_position_deletes(spark, df, pos_paths, dv_pairs)
-            return df
-        return _read_with_equality_deletes(spark, entries, pos_paths, dv_pairs)
+        tomb = tombstones(entries, source)
+        if not entries["eq_deletes"]:
+            df = spark.read.parquet(
+                *[file_key(x["path"], source) for x in entries["data"]]
+            )
+            return _apply_position_deletes(spark, df, tomb)
+        return _read_with_equality_deletes(spark, entries, tomb, source)
     if snapshot_id is not None:
         raise ValueError(
             f"time travel requested but {source!r} is not an Iceberg table"
@@ -228,12 +266,7 @@ def read_with_lineage(spark: SparkSession, source: str) -> DataFrame:
         raise NotImplementedError(
             "read_with_lineage does not support equality-delete tables"
         )
-    pos_paths = [x["path"] for x in entries["pos_deletes"]]
-    dv_pairs = [
-        (ref, p)
-        for ref, ps in sorted(deletion_vector_positions(entries).items())
-        for p in sorted(ps)
-    ]
+    tomb = tombstones(entries, source)
     virtual, materialized = [], []
     for e in entries["data"]:
         cols = pq.read_schema(e["path"]).names
@@ -249,66 +282,33 @@ def read_with_lineage(spark: SparkSession, source: str) -> DataFrame:
             )
     parts = []
     if virtual:
-        # capture (file, position) ON the scan relation — the hidden
-        # _metadata columns resolve there and both the tombstone
-        # subtraction and the lineage arithmetic key on them
-        keyed = spark.read.parquet(*[e["path"] for e in virtual]).withColumns(
-            {
-                "_fp0": F.regexp_replace(
-                    F.col("_metadata.file_path"), "^file:/+", "/"
-                ),
-                "_ri0": F.col("_metadata.row_index"),
-            }
+        # the tombstone subtraction and the lineage arithmetic both key
+        # on (file, position) captured on the scan relation
+        keyed = _apply_position_deletes(
+            spark,
+            spark.read.parquet(*[file_key(e["path"], source) for e in virtual]),
+            tomb,
+            keep_keys=True,
         )
-        dels = None
-        if pos_paths:
-            dels = spark.read.parquet(*pos_paths).select(
-                F.regexp_replace("file_path", "^file:/+", "/").alias("_dfp"),
-                F.col("pos").cast("long").alias("_dpos"),
-            )
-        if dv_pairs:
-            dv_df = spark.createDataFrame(
-                [(p, int(i)) for p, i in dv_pairs], "_dfp string, _dpos long"
-            )
-            dels = dv_df if dels is None else dels.unionByName(dv_df)
-        if dels is not None:
-            keyed = keyed.join(
-                F.broadcast(dels),
-                (keyed["_fp0"] == dels["_dfp"])
-                & (keyed["_ri0"] == dels["_dpos"]),
-                "left_anti",
-            )
         dim = spark.createDataFrame(
             [
-                (
-                    re.sub(
-                        r"^file:/+",
-                        "/",
-                        f"file://{Path(str(e['path'])).resolve()}",
-                    ),
-                    int(e["first_row_id"]),
-                    int(e["seq"]),
-                )
+                (file_key(e["path"], source), int(e["first_row_id"]), int(e["seq"]))
                 for e in virtual
             ],
             "_lfp string, _first long, _lseq long",
         )
-        joined = keyed.join(
-            F.broadcast(dim), keyed["_fp0"] == dim["_lfp"], "inner"
-        )
+        joined = keyed.join(F.broadcast(dim), keyed["_fp"] == dim["_lfp"], "inner")
         parts.append(
             joined.withColumns(
                 {
-                    "_row_id": F.col("_first") + F.col("_ri0"),
+                    "_row_id": F.col("_first") + F.col("_ri"),
                     "_last_updated_sequence_number": F.col("_lseq"),
                 }
-            ).drop("_fp0", "_ri0", "_lfp", "_first", "_lseq")
+            ).drop("_fp", "_ri", "_lfp", "_first", "_lseq")
         )
     if materialized:
-        df = spark.read.parquet(*[e["path"] for e in materialized])
-        if pos_paths or dv_pairs:
-            df = _apply_position_deletes(spark, df, pos_paths, dv_pairs)
-        parts.append(df)
+        df = spark.read.parquet(*[file_key(e["path"], source) for e in materialized])
+        parts.append(_apply_position_deletes(spark, df, tomb))
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -318,56 +318,39 @@ def read_with_lineage(spark: SparkSession, source: str) -> DataFrame:
 def _apply_position_deletes(
     spark: SparkSession,
     df: DataFrame,
-    delete_paths: list[str],
-    dv_pairs: list[tuple] | None = None,
+    tomb: dict[str, set],
+    keep_keys: bool = False,
 ) -> DataFrame:
-    """Merge-on-read: subtract v2 position-delete rows (file_path, pos)
-    from a data scan — Spark-first, via the parquet reader's
-    ``_metadata.file_path`` / ``_metadata.row_index`` hidden columns and a
-    broadcast LEFT ANTI join. Delete files are tiny next to the data they
+    """Merge-on-read: subtract a :func:`tombstones` map from a data scan
+    whose files were opened by :func:`file_key` — Spark-first, keyed on
+    ``(_fp, _ri)`` = (:func:`_file_key_expr`, ``_metadata.row_index``) and a
+    broadcast LEFT ANTI join. Delete sets are tiny next to the data they
     tombstone (that is the point of merge-on-read), so the broadcast is the
     plan a real Iceberg planner produces too (it pushes per-file delete
-    vectors into the scan). Path spellings differ between the writer
-    (``file:///x``) and Spark's metadata column (``file:/x``); both
-    normalize to a plain path before the join."""
+    vectors into the scan). ``keep_keys`` keeps ``_fp`` / ``_ri`` for a
+    caller that joins on them next."""
     from pyspark.sql import functions as F
 
-    dels = None
-    if delete_paths:
-        dels = spark.read.parquet(*delete_paths).select(
-            F.regexp_replace("file_path", "^file:/+", "/").alias("_dfp"),
-            F.col("pos").cast("long").alias("_dpos"),
-        )
-    if dv_pairs:
-        # deletion vectors decode driver-side (tiny blobs) into the same
-        # (path, pos) broadcast shape as the v2 delete parquet
-        dv_df = spark.createDataFrame(
-            [(p, int(i)) for p, i in dv_pairs], "_dfp string, _dpos long"
-        )
-        dels = dv_df if dels is None else dels.unionByName(dv_df)
+    if not tomb and not keep_keys:
+        return df
     keyed = df.withColumns(
-        {
-            "_fp": F.regexp_replace(
-                F.col("_metadata.file_path"), "^file:/+", "/"
-            ),
-            "_ri": F.col("_metadata.row_index"),
-        }
+        {"_fp": _file_key_expr(), "_ri": F.col("_metadata.row_index")}
     )
-    return (
-        keyed.join(
+    if tomb:
+        dels = spark.createDataFrame(
+            [(k, p) for k, ps in sorted(tomb.items()) for p in sorted(ps)],
+            "_dfp string, _dpos long",
+        )
+        keyed = keyed.join(
             F.broadcast(dels),
             (keyed["_fp"] == dels["_dfp"]) & (keyed["_ri"] == dels["_dpos"]),
             "left_anti",
         )
-        .drop("_fp", "_ri")
-    )
+    return keyed if keep_keys else keyed.drop("_fp", "_ri")
 
 
 def _read_with_equality_deletes(
-    spark: SparkSession,
-    entries: dict,
-    pos_paths: list[str],
-    dv_pairs: list[tuple] | None = None,
+    spark: SparkSession, entries: dict, tomb: dict[str, set], table_root
 ) -> DataFrame:
     """Merge-on-read with v2 EQUALITY deletes: an equality delete applies
     to data files with STRICTLY SMALLER sequence numbers, so data files are
@@ -389,9 +372,8 @@ def _read_with_equality_deletes(
         groups[applicable].append(d["path"])
     parts = []
     for applicable, paths in sorted(groups.items()):
-        part = spark.read.parquet(*sorted(paths))
-        if pos_paths or dv_pairs:
-            part = _apply_position_deletes(spark, part, pos_paths, dv_pairs)
+        part = spark.read.parquet(*[file_key(p, table_root) for p in sorted(paths)])
+        part = _apply_position_deletes(spark, part, tomb)
         for dp in applicable:
             keys = spark.read.parquet(dp)
             part = part.join(F.broadcast(keys), on=keys.columns, how="left_anti")
@@ -564,10 +546,8 @@ def iceberg_scan_entries_static(
                         # re-rooted like file_path, or a relocated
                         # table's DV keys the old location and stops
                         # applying
-                        "referenced": re.sub(
-                            r"^file:/+",
-                            "/",
-                            _localize(df_rec["referenced_data_file"], root),
+                        "referenced": file_key(
+                            df_rec["referenced_data_file"], root
                         ),
                         "seq": (
                             int(e["sequence_number"])
@@ -903,14 +883,7 @@ def read_table_evolved(
     cur = schemas[int(meta["current-schema-id"])]
     cur_by_id = {f["id"]: f for f in cur["fields"]}
     entries = iceberg_scan_entries_static(table_dir, snapshot_id=snapshot_id)
-    pos_paths = [x["path"] for x in entries["pos_deletes"]]
-    # v3 deletion vectors subtract exactly like pos-deletes (and before
-    # the field-id projection, same as them — positions are physical)
-    dv_pairs = [
-        (ref, p)
-        for ref, ps in sorted(deletion_vector_positions(entries).items())
-        for p in sorted(ps)
-    ]
+    tomb = tombstones(entries, table_dir)
     eqs = entries["eq_deletes"]
     # (file schema id, applicable delete set) -> data paths; a key
     # re-inserted by a later-sequence append survives (spec rule)
@@ -962,12 +935,11 @@ def read_table_evolved(
                 cols.append(F.lit(None).cast(t).alias(f["name"]))
             else:
                 cols.append(F.col(src["name"]).cast(t).alias(f["name"]))
-        scan = spark.read.parquet(*sorted(paths))
-        if pos_paths or dv_pairs:
-            # position deletes key on (file_path, row_index) — schema-name
-            # independent, so they compose with evolution by applying
-            # BEFORE the field-id projection (which drops _metadata)
-            scan = _apply_position_deletes(spark, scan, pos_paths, dv_pairs)
+        scan = spark.read.parquet(*[file_key(p, table_dir) for p in sorted(paths)])
+        # position deletes key on (file, row_index) — schema-name
+        # independent, so they compose with evolution by applying BEFORE
+        # the field-id projection (which drops _metadata)
+        scan = _apply_position_deletes(spark, scan, tomb)
         part = scan.select(cols)
         for dp, del_sid in applicable:
             keys = current_keys(dp, del_sid)
@@ -1178,14 +1150,15 @@ def iceberg_scan_plan_mor(
     snapshot_id: int | None = None,
 ) -> tuple[list[dict], int]:
     """Like :func:`iceberg_scan_paths_pruned` but returns a full
-    MERGE-ON-READ plan: one item per surviving data file with the delete
-    files that apply to it — ``{"path", "schema_id", "pos_deletes",
+    MERGE-ON-READ plan: one item per surviving data file with the deletes
+    that apply to it — ``{"path", "schema_id", "dvs", "positions",
     "eq_deletes"}`` where ``eq_deletes`` is ``[(path, schema_id), ...]``
-    (the schema ids let a reader resolve columns by field id across
-    schema evolution). Equality deletes attach per the spec's
-    strict-smaller-sequence rule (delete.seq > data.seq); position
-    deletes are row-position keyed, so every file gets the full (tiny)
-    list and the reader filters by file_path. Stats/partition pruning
+    (the schema ids let a reader resolve columns by field id across schema
+    evolution). Equality deletes attach per the spec's
+    strict-smaller-sequence rule (delete.seq > data.seq); ``dvs`` holds the
+    deletion-vector blobs referencing this file and ``positions`` this
+    file's sorted :func:`tombstones` entry (its DVs and v2 position-delete
+    rows) — the rows a reader drops. Stats/partition pruning
     stays sound under deletes: deletes only REMOVE rows, so a file that
     cannot match the predicate still cannot match after subtraction."""
     entries = iceberg_scan_entries_static(table_dir, snapshot_id=snapshot_id)
@@ -1194,7 +1167,7 @@ def iceberg_scan_plan_mor(
     predicates = _coerce_predicates(meta, predicates)
     spec = _default_spec_fields(meta)
     by_id = _specs_by_id(meta)
-    pos_paths = sorted(e["path"] for e in entries["pos_deletes"])
+    tomb = tombstones(entries, table_dir)
     eqs = entries["eq_deletes"]
     dvs_by_ref: dict[str, list[str]] = {}
     for d in entries.get("dvs", ()):
@@ -1203,20 +1176,11 @@ def iceberg_scan_plan_mor(
         {
             "path": e["path"],
             "schema_id": e.get("schema_id"),
-            "pos_deletes": pos_paths,
             # v3 deletion vectors are inherently per-file: attach only the
             # blob(s) referencing THIS file (at most one when written by
             # delete_where_dv — the supersede rule)
-            "dvs": sorted(
-                dvs_by_ref.get(
-                    re.sub(
-                        r"^file:/+",
-                        "/",
-                        f"file://{Path(str(e['path'])).resolve()}",
-                    ),
-                    (),
-                )
-            ),
+            "dvs": sorted(dvs_by_ref.get(file_key(e["path"], table_dir), ())),
+            "positions": sorted(tomb.get(file_key(e["path"], table_dir), ())),
             "eq_deletes": sorted(
                 (d["path"], d.get("schema_id"))
                 for d in eqs

@@ -1091,21 +1091,15 @@ def add_files(
     procedure's default) an import referencing a path already live in
     the table raises instead of double-counting its rows. Returns the
     new snapshot id."""
-    import re as _re
+    from .iceberg import file_key
 
     root = Path(str(root))
     missing = [str(p) for p in source_files if not Path(str(p)).exists()]
     if missing:
         raise FileNotFoundError(f"add_files: missing {missing}")
     if check_duplicate_files:
-        live = {
-            _re.sub(r"^file:/+", "/", p) for p in live_paths(root)
-        }
-        dups = [
-            str(p)
-            for p in source_files
-            if str(Path(str(p)).resolve()) in live
-        ]
+        live = {file_key(p, root) for p in live_paths(root)}
+        dups = [str(p) for p in source_files if file_key(p, root) in live]
         if dups:
             raise ValueError(
                 f"add_files: already referenced by the table: {dups}"
@@ -1184,31 +1178,19 @@ def _plan_matched_positions(
     vector or a v2 position delete are matched again (deletes are sets)
     but not recounted. Returns ``(positions, n_deleted, files_scanned,
     files_total)``."""
-    import re as _re
-
     import numpy as np
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     from .iceberg import (
-        deletion_vector_positions,
+        file_key,
         iceberg_scan_entries_static,
         iceberg_scan_paths_pruned,
+        tombstones,
     )
 
     paths, total = iceberg_scan_paths_pruned(str(root), predicates)
-    entries = iceberg_scan_entries_static(str(root))
-    already: set[tuple[str, int]] = set()
-    for ref, ps in deletion_vector_positions(entries).items():
-        already.update((ref, int(i)) for i in ps)
-    for e in entries["pos_deletes"]:
-        dt = pq.read_table(
-            e["path"], columns=["file_path", "pos"], use_threads=False
-        )
-        for fp, pos in zip(
-            dt["file_path"].to_pylist(), dt["pos"].to_pylist()
-        ):
-            already.add((_re.sub(r"^file:/+", "/", fp), int(pos)))
+    already = tombstones(iceberg_scan_entries_static(str(root)), root)
     cols = sorted({c for c, _, _ in predicates})
     ops = _residual_ops()
     positions: dict[str, list[int]] = {}
@@ -1226,10 +1208,8 @@ def _plan_matched_positions(
         )[0]
         if idx.shape[0]:
             positions[str(p)] = [int(i) for i in idx]
-            norm = _re.sub(
-                r"^file:/+", "/", f"file://{Path(str(p)).resolve()}"
-            )
-            n_deleted += sum(1 for i in idx if (norm, int(i)) not in already)
+            done = already.get(file_key(p, root), ())
+            n_deleted += sum(1 for i in idx if int(i) not in done)
     return positions, n_deleted, len(paths), total
 
 
@@ -1246,9 +1226,11 @@ def delete_rows_snapshot(
     referenced from a DELETE manifest (content 1) added alongside the
     previous snapshot's manifests. No data file is rewritten — the read
     side subtracts the (file, pos) rows at scan time
-    (sources/iceberg.py _apply_position_deletes)."""
+    (sources/iceberg.py tombstones)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
+
+    from .iceberg import file_key
 
     root = Path(str(root))
     version, meta = _load_current(root)
@@ -1259,7 +1241,7 @@ def delete_rows_snapshot(
     )
     eseq = int(meta.get("last-sequence-number", 0)) + 1
     rows = sorted(
-        (f"file://{Path(str(p)).resolve()}", int(i))
+        (f"file://{file_key(p, root)}", int(i))
         for p, idxs in positions.items()
         for i in idxs
     )
@@ -1356,15 +1338,12 @@ def write_deletion_vectors(
     Semantics reference: Apache Iceberg v3 table spec (public docs) —
     deletion vectors, ``referenced_data_file``, one-DV-per-file rule.
     Returns ``{"snapshot_id", "n_dvs", "n_superseded", "cardinality"}``."""
-    import re as _re
-
-    import pyarrow.parquet as pq
-
     from .iceberg import (
         _localize,
-        deletion_vector_positions,
         encode_deletion_vector,
+        file_key,
         iceberg_scan_entries_static,
+        tombstones,
     )
 
     root = Path(str(root))
@@ -1375,27 +1354,15 @@ def write_deletion_vectors(
         else int(meta.get("last-sequence-number", 0)) + 1
     )
     eseq = int(meta.get("last-sequence-number", 0)) + 1
-    entries = iceberg_scan_entries_static(str(root))
-
-    def _norm(p) -> str:
-        return _re.sub(r"^file:/+", "/", f"file://{Path(str(p)).resolve()}")
-
     merged = {
-        _norm(p): set(int(i) for i in idxs) for p, idxs in positions.items()
+        file_key(p, root): set(int(i) for i in idxs)
+        for p, idxs in positions.items()
     }
-    # merge-on-write: previous DV positions ...
-    for ref, prev in deletion_vector_positions(entries).items():
+    # merge-on-write: the previous DV and v2 position-delete rows of the
+    # affected files
+    for ref, prev in tombstones(iceberg_scan_entries_static(str(root)), root).items():
         if ref in merged:
             merged[ref] |= prev
-    # ... and v2 position-delete rows for the affected files
-    for e in entries["pos_deletes"]:
-        t = pq.read_table(
-            e["path"], columns=["file_path", "pos"], use_threads=False
-        )
-        for fp, p in zip(t["file_path"].to_pylist(), t["pos"].to_pylist()):
-            ref = _re.sub(r"^file:/+", "/", fp)
-            if ref in merged:
-                merged[ref].add(int(p))
     tag = uuid.uuid5(uuid.NAMESPACE_URL, f"dv-{sid}").hex[:8]
     new_entries = []
     for i, ref in enumerate(sorted(merged)):
@@ -1434,10 +1401,7 @@ def write_deletion_vectors(
             for e in m_entries
             if e.get("status", 0) != 2
             and e["data_file"].get("referenced_data_file")
-            and _re.sub(
-                r"^file:/+", "/", e["data_file"]["referenced_data_file"]
-            )
-            in merged
+            and file_key(e["data_file"]["referenced_data_file"], root) in merged
         ]
         if not drop:
             manifest_rows.append(mrow)
@@ -1546,15 +1510,18 @@ def update_where(
     ``assignments`` is ``[(column, op, operand), ...]`` with op in
     ``set add mul`` applied left-to-right on the matched rows. Returns
     ``(n_updated, files_scanned, files_total)``."""
-    import re
-
     import numpy as np
     import pandas as pd
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    from .iceberg import iceberg_scan_entries_static, iceberg_scan_paths_pruned
+    from .iceberg import (
+        file_key,
+        iceberg_scan_entries_static,
+        iceberg_scan_paths_pruned,
+        tombstones,
+    )
 
     root = Path(str(root))
     version, meta = _load_current(root)
@@ -1571,29 +1538,14 @@ def update_where(
         )
     paths, total = iceberg_scan_paths_pruned(str(root), predicates)
     entries = iceberg_scan_entries_static(str(root))
-    by_path = {
-        re.sub(r"^file:/+", "/", f"file://{Path(e['path']).resolve()}"): e
-        for e in entries["data"]
-    }
-    pos_map: dict[str, set] = {}
-    for d in entries["pos_deletes"]:
-        t = pq.read_table(
-            d["path"], columns=["file_path", "pos"], use_threads=False
-        )
-        for fp, p in zip(t["file_path"].to_pylist(), t["pos"].to_pylist()):
-            pos_map.setdefault(re.sub(r"^file:/+", "/", fp), set()).add(
-                int(p)
-            )
-    from .iceberg import deletion_vector_positions as _dvp
-
-    for ref, ps in _dvp(entries).items():
-        pos_map.setdefault(ref, set()).update(int(i) for i in ps)
+    by_path = {file_key(e["path"], root): e for e in entries["data"]}
+    pos_map = tombstones(entries, root)
     ops = _residual_ops()
     positions: dict[str, list[int]] = {}
     updated: list[pa.Table] = []
     n_updated = 0
     for p in paths:
-        norm = re.sub(r"^file:/+", "/", f"file://{Path(str(p)).resolve()}")
+        norm = file_key(p, root)
         e = by_path[norm]
         tbl = pq.read_table(p, use_threads=False)
         live = np.ones(tbl.num_rows, dtype=bool)
@@ -1653,7 +1605,7 @@ def update_where(
     tag = uuid.uuid5(uuid.NAMESPACE_URL, str(sid)).hex[:8]
     # delete leg: one sorted position-delete parquet (spec schema/order)
     del_rows = sorted(
-        (f"file://{Path(str(p)).resolve()}", i)
+        (f"file://{file_key(p, root)}", i)
         for p, idxs in positions.items()
         for i in idxs
     )
@@ -1828,7 +1780,7 @@ def _referenced_paths(
     it every referenced path counts (the orphan-detection rule: a
     committed-then-tombstoned file is expiration's job, not an orphan)."""
     from .avro_lite import read_container
-    from .iceberg import _localize, current_metadata
+    from .iceberg import _localize, current_metadata, file_key
 
     meta = current_metadata(root)
     snaps = {sn["snapshot-id"]: sn for sn in meta.get("snapshots", [])}
@@ -1836,18 +1788,16 @@ def _referenced_paths(
     file_paths: set = set()
     for sid in snapshot_ids_subset:
         ml = _localize(snaps[sid]["manifest-list"], root)
-        meta_paths.add(str(Path(ml).resolve()))
+        meta_paths.add(file_key(ml, root))
         _, manifests = read_container(ml)
         for m in manifests:
             mp = _localize(m["manifest_path"], root)
-            meta_paths.add(str(Path(mp).resolve()))
+            meta_paths.add(file_key(mp, root))
             _, entries = read_container(mp)
             for e in entries:
                 if live_only and e.get("status", 0) == 2:
                     continue
-                file_paths.add(
-                    str(Path(_localize(e["data_file"]["file_path"], root)).resolve())
-                )
+                file_paths.add(file_key(e["data_file"]["file_path"], root))
     return meta_paths, file_paths
 
 
@@ -1938,11 +1888,11 @@ def expire_snapshots(
     dead_files = sorted(drop_files - keep_files)
     # statistics files of expired snapshots expire with them (Iceberg's
     # expire_snapshots removes their Puffin files and metadata entries)
-    import re as _re
+    from .iceberg import file_key
 
     drop_set = set(drop_ids)
     dead_stats = [
-        _re.sub(r"^file:/+", "/", s["statistics-path"])
+        file_key(s["statistics-path"], root)
         for kind in ("statistics", "partition-statistics")
         for s in meta.get(kind, [])
         if s.get("snapshot-id") in drop_set
@@ -2071,9 +2021,9 @@ def read_table_stats(
     )
     if entry is None:
         raise KeyError(f"snapshot {sid} has no statistics file")
-    import re
+    from .iceberg import _localize
 
-    local = re.sub(r"^file:/+", "/", entry["statistics-path"])
+    local = _localize(entry["statistics-path"], root)
     t = pq.read_table(local, use_threads=False)
     return {
         c: {"ndv": int(n), "blob": bytes(b), "blob_type": bt}
@@ -2178,9 +2128,10 @@ def read_partition_stats(
     sorted by partition JSON; raises KeyError when absent — a planner
     must KNOW stats are missing, not see an empty table."""
     import json as _json
-    import re
 
     import pyarrow.parquet as pq
+
+    from .iceberg import _localize
 
     root = Path(str(root))
     _, meta = _load_current(root)
@@ -2199,7 +2150,7 @@ def read_partition_stats(
     )
     if entry is None:
         raise KeyError(f"snapshot {sid} has no partition statistics")
-    local = re.sub(r"^file:/+", "/", entry["statistics-path"])
+    local = _localize(entry["statistics-path"], root)
     t = pq.read_table(local, use_threads=False)
     return [
         {
@@ -2225,13 +2176,15 @@ def orphan_files(root: str | Path) -> list[str]:
     only; the caller decides on a deletion grace period, as Iceberg's
     remove_orphan_files does (files younger than the newest in-flight
     commit window must survive)."""
+    from .iceberg import file_key
+
     root = Path(str(root))
     _, meta = _load_current(root)
     ids = [sn["snapshot-id"] for sn in meta.get("snapshots", [])]
     _, referenced = _referenced_paths(root, ids)
     out = []
     for p in sorted((root / "data").rglob("*")):
-        if p.is_file() and str(p.resolve()) not in referenced:
+        if p.is_file() and file_key(p, root) not in referenced:
             out.append(str(p))
     return out
 
@@ -2322,13 +2275,12 @@ def rewrite_data_files(
     Returns ``{"files_before", "files_after", "files_rewritten",
     "files_written", "rows_rewritten"}`` (data files only)."""
     import json as _json
-    import re as _re
 
     import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from .iceberg import _localize, iceberg_scan_entries_static
+    from .iceberg import _localize, file_key, iceberg_scan_entries_static, tombstones
 
     root = Path(str(root))
     version, meta = _load_current(root)
@@ -2345,20 +2297,7 @@ def rewrite_data_files(
     if cur is None or cur == -1 or not data:
         return result
     eqs = entries["eq_deletes"]
-    # (normalized data path) -> tombstoned row positions
-    pos_map: dict[str, set] = {}
-    for d in entries["pos_deletes"]:
-        t = pq.read_table(
-            d["path"], columns=["file_path", "pos"], use_threads=False
-        )
-        for fp, p in zip(t["file_path"].to_pylist(), t["pos"].to_pylist()):
-            pos_map.setdefault(
-                _re.sub(r"^file:/+", "/", fp), set()
-            ).add(int(p))
-    from .iceberg import deletion_vector_positions as _dvp
-
-    for ref, ps in _dvp(entries).items():
-        pos_map.setdefault(ref, set()).update(int(i) for i in ps)
+    pos_map = tombstones(entries, root)
 
     def _eq_cols(path: str) -> list[str]:
         return pq.read_schema(path).names
@@ -2429,10 +2368,7 @@ def rewrite_data_files(
                 "_last_updated_sequence_number",
                 pa.array([int(e["seq"])] * tbl.num_rows, pa.int64()),
             )
-        norm = _re.sub(
-            r"^file:/+", "/", f"file://{Path(str(e['path'])).resolve()}"
-        )
-        drop = pos_map.get(norm)
+        drop = pos_map.get(file_key(e["path"], root))
         if drop:
             keep = np.setdiff1d(
                 np.arange(tbl.num_rows, dtype=np.int64),
@@ -2487,7 +2423,7 @@ def rewrite_data_files(
             ne["data_file"]["partition"] = proto.get("partition")
             new_entries.append(ne)
             result["rows_rewritten"] += part.num_rows
-        rewritten_paths.update(str(e["path"]) for e in b)
+        rewritten_paths.update(file_key(e["path"], root) for e in b)
     # fresh manifest list: carried live entries verbatim (explicit
     # sequence numbers stamped, tombstones dropped) minus the rewritten
     # files, plus the consolidated files — same construction as
@@ -2503,8 +2439,7 @@ def rewrite_data_files(
         for e in m_entries:
             if e.get("status", 0) == 2:
                 continue
-            path = str(_localize(e["data_file"]["file_path"], root))
-            if path in rewritten_paths:
+            if file_key(e["data_file"]["file_path"], root) in rewritten_paths:
                 continue
             if e.get("sequence_number") is None:
                 e = dict(
@@ -2520,14 +2455,7 @@ def rewrite_data_files(
     # left, can never tombstone anything again — dropping them is what
     # lets stats-only readers (iceberg_metadata_aggregates) turn back on
     # after a compaction folded all deletes in
-    live_norm = {
-        _re.sub(
-            r"^file:/+",
-            "/",
-            f"file://{Path(str(_localize(e['data_file']['file_path'], root))).resolve()}",
-        )
-        for e in buckets[0]
-    }
+    live_norm = {file_key(e["data_file"]["file_path"], root) for e in buckets[0]}
     min_live_seq = min(
         (int(e.get("sequence_number") or 0) for e in buckets[0]),
         default=0,
@@ -2535,24 +2463,15 @@ def rewrite_data_files(
 
     def _delete_still_applies(e: dict) -> bool:
         dfrec = e["data_file"]
-        dpath = str(_localize(dfrec["file_path"], root))
         if dfrec.get("referenced_data_file"):  # v3 DV: single-file keyed
-            return (
-                _re.sub(r"^file:/+", "/", dfrec["referenced_data_file"])
-                in live_norm
-            )
+            return file_key(dfrec["referenced_data_file"], root) in live_norm
         if dfrec.get("content", 0) == 1:  # position delete: path-keyed
+            dpath = _localize(dfrec["file_path"], root)
             try:
-                t = pq.read_table(
-                    dpath, columns=["file_path"], use_threads=False
-                )
+                refs = tombstones({"pos_deletes": [{"path": dpath}]}, root)
             except Exception:
                 return True  # unreadable: keep, never silently drop
-            refs = {
-                _re.sub(r"^file:/+", "/", p)
-                for p in t["file_path"].to_pylist()
-            }
-            return bool(refs & live_norm)
+            return not live_norm.isdisjoint(refs)
         # equality delete: applies to strictly smaller sequences only
         return min_live_seq < int(e.get("sequence_number") or 0)
 
@@ -2588,17 +2507,17 @@ def rewrite_position_deletes(
     a table under steady DELETE traffic makes every MERGE-ON-READ scan
     open hundreds of kilobyte-sized delete files; this merges them into
     ONE spec-shaped file (``file_path`` string, ``pos`` long, sorted by
-    (file_path, pos) as the spec requires), DEDUPED on the normalized
-    (path, pos) key, and drops DANGLING rows — tombstones pointing at
-    data files no longer in the live set (compaction/overwrite removed
-    them), which can never subtract anything again.
+    (file_path, pos) as the spec requires), DEDUPED on the (``file_key``,
+    pos) key, and drops DANGLING rows — tombstones pointing at data files
+    no longer in the live set (compaction/overwrite removed them), which
+    can never subtract anything again.
 
-    The commit is a ``replace`` snapshot: data entries and
-    equality-delete entries carry VERBATIM (status, sequence numbers,
+    The commit is a ``replace`` snapshot: data entries, equality-delete
+    entries and deletion vectors carry VERBATIM (status, sequence numbers,
     bounds, spec/schema ids — stats pruning and eq-delete applicability
     replay identically); the merged pos-delete entry is stamped with the
     MAX input sequence number. Position deletes are applied path-keyed
-    (sources/iceberg.py _apply_position_deletes), and rewritten data
+    (sources/iceberg.py tombstones), and rewritten data
     files always take fresh paths, so widening the sequence cannot
     re-attach a tombstone to a row it never covered. Prior snapshots
     keep their own manifest lists (time travel / changelog untouched);
@@ -2607,12 +2526,10 @@ def rewrite_position_deletes(
     Returns ``(n_pos_files_before, n_pos_files_after, n_rows_before,
     n_rows_after)``; no-ops (no commit) when the table is already
     compact (≤1 pos-delete file and zero dangling/duplicate rows)."""
-    import re as _re
-
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from .iceberg import _localize
+    from .iceberg import _localize, file_key, tombstones
 
     root = Path(str(root))
     version, meta = _load_current(root)
@@ -2623,7 +2540,9 @@ def rewrite_position_deletes(
         s["snapshot-id"]: s.get("sequence-number", 0)
         for s in meta.get("snapshots", [])
     }
-    buckets: dict[int, list[dict]] = {0: [], 1: [], 2: []}
+    data: list[dict] = []
+    pos_entries: list[dict] = []
+    carried: list[dict] = []  # equality deletes and DVs
     for mrow in _current_manifests(root, meta):
         mp = _localize(mrow["manifest_path"], root)
         _, entries = avro_lite.read_container(mp)
@@ -2634,38 +2553,36 @@ def rewrite_position_deletes(
                 e = dict(
                     e, sequence_number=seq_of.get(e.get("snapshot_id"), 0)
                 )
-            buckets[e["data_file"].get("content", 0)].append(e)
-    pos_entries = buckets[1]
+            df_rec = e["data_file"]
+            if df_rec.get("content", 0) == 0:
+                data.append(e)
+            elif df_rec["content"] == 1 and not df_rec.get("referenced_data_file"):
+                pos_entries.append(e)
+            else:
+                carried.append(e)
     n_before = len(pos_entries)
     if n_before == 0:
         return (0, 0, 0, 0)
-    live_norm = {
-        _re.sub(r"^file:/+", "/", str(e["data_file"]["file_path"]))
-        for e in buckets[0]
-    }
-    rows_before = 0
-    kept: dict[tuple[str, int], None] = {}
-    for e in pos_entries:
-        dpath = str(_localize(e["data_file"]["file_path"], root))
-        t = pq.read_table(
-            dpath, columns=["file_path", "pos"], use_threads=False
-        )
-        paths = t["file_path"].to_pylist()
-        poss = t["pos"].to_pylist()
-        rows_before += len(paths)
-        for p, i in zip(paths, poss):
-            norm = _re.sub(r"^file:/+", "/", p)
-            if norm in live_norm:
-                kept.setdefault((norm, int(i)))
-    rows_after = len(kept)
+    live = {file_key(e["data_file"]["file_path"], root) for e in data}
+    rows_before = sum(int(e["data_file"]["record_count"]) for e in pos_entries)
+    tomb = tombstones(
+        {
+            "pos_deletes": [
+                {"path": _localize(e["data_file"]["file_path"], root)}
+                for e in pos_entries
+            ]
+        },
+        root,
+    )
+    merged = sorted((k, i) for k, ps in tomb.items() if k in live for i in ps)
+    rows_after = len(merged)
     if n_before <= 1 and rows_after == rows_before:
         return (n_before, n_before, rows_before, rows_before)
     sid = int(meta.get("last-sequence-number", 0)) + 1
     tag = uuid.uuid5(uuid.NAMESPACE_URL, f"rewrite-pos-{sid}").hex[:8]
-    delete_bucket = list(buckets[2])
+    delete_bucket = list(carried)
     n_after = 0
     if rows_after:
-        merged = sorted(kept)
         del_file = root / "data" / f"delete-compact-{sid}-{tag}.parquet"
         pq.write_table(
             pa.table(
@@ -2686,7 +2603,7 @@ def rewrite_position_deletes(
         delete_bucket.append(entry)
         n_after = 1
     new_rows = []
-    for kind, entries in ((0, buckets[0]), (1, delete_bucket)):
+    for kind, entries in ((0, data), (1, delete_bucket)):
         if not entries:
             continue
         m = _meta_dir(root) / f"m-{sid}-{tag}-c{kind}.avro"

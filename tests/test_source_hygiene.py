@@ -40,3 +40,29 @@ def test_oracle_regex_escapes_unchanged():
     for name, digest in ORACLE_SQL_SHA256.items():
         assert "'\\s+'" in sql[name], name
         assert hashlib.sha256(sql[name].encode()).hexdigest() == digest, name
+
+
+def test_file_scheme_strip_lives_only_in_file_key():
+    """Iceberg file identities are compared only through
+    ``iceberg.file_key`` and its Spark twin ``iceberg._file_key_expr``; a
+    hand-rolled ``^file:/+`` strip anywhere else in ``sources/`` is how one
+    file came to be spelled several ways (symlinked, percent-encoded and
+    relocated roots each lost deleted rows)."""
+    import ast
+
+    allowed = {"file_key", "_file_key_expr"}
+    hits = []
+    for path in sorted((ROOT / "tdigest_spark" / "sources").rglob("*.py")):
+        text = path.read_text()
+        funcs = [
+            (n.lineno, n.end_lineno, n.name)
+            for n in ast.walk(ast.parse(text))
+            if isinstance(n, ast.FunctionDef)
+        ]
+        for i, line in enumerate(text.splitlines(), 1):
+            if "file:/+" in line:
+                owner = [f for lo, hi, f in funcs if lo <= i <= hi]
+                hits.append((path.name, i, owner[-1] if owner else None))
+    stray = [h for h in hits if h[0] != "iceberg.py" or h[2] not in allowed]
+    assert not stray, stray
+    assert len(hits) <= len(allowed), hits
