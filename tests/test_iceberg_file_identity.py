@@ -192,3 +192,18 @@ def test_rewrite_position_deletes_carries_deletion_vectors(tmp_path, spark):
     assert len(entries["pos_deletes"]) == 1
     assert [d["path"] for d in entries["dvs"]] == [d["path"] for d in dvs]
     assert sorted(r.id for r in read_sequences(spark, str(root)).collect()) == expect
+
+
+def test_spark_file_key_round_trips_odd_directory_names(tmp_path, spark):
+    """A scan opened by ``file_key`` reads the same key back through the
+    Spark twin, for names Spark percent-encodes (or would decode wrongly:
+    ``url_decode`` alone reads ``+`` as a space)."""
+    from tdigest_spark.sources.iceberg import _file_key_expr, file_key
+
+    names = ["a b", "a+b", "a%b", "a%20b", "x#y", "q?r", "é"]
+    keys = []
+    for n in names:
+        (tmp_path / n).mkdir()
+        keys.append(file_key(_write(tmp_path / n / "f.parquet", [1]), tmp_path))
+    got = spark.read.parquet(*keys).select(_file_key_expr().alias("k")).collect()
+    assert sorted(r.k for r in got) == sorted(keys)
