@@ -3564,13 +3564,14 @@ def kll_rank_error_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     sk = _scan_build(
         spark, sf_dir, "lineitem", {"s": ("l_extendedprice", KLL_SPEC(200))}
     )["s"]
-    n = li.count()
     ps = [0.01, 0.1, 0.25, 0.5, 0.75, 0.9, 0.99]
-    rows = []
-    for p in ps:
-        est = float(sk.quantile(p))
-        rank = li.where(F.col("l_extendedprice") <= est).count() / n
-        rows.append((p, bool(abs(rank - p) <= 0.025)))
+    # one job: the row count and every estimate's rank count in one agg
+    n, *below = li.agg(
+        F.count(F.lit(1)),
+        *(F.count(F.when(F.col("l_extendedprice") <= float(sk.quantile(p)), 1))
+          for p in ps),
+    ).first()
+    rows = [(p, bool(abs(c / n - p) <= 0.025)) for p, c in zip(ps, below)]
     return spark.createDataFrame(rows, "p double, within_bound boolean")
 
 

@@ -100,9 +100,8 @@ class CMS:
         key value)."""
         if self.k_heavy <= 0:
             return
-        cand = set(self.heavy.keys())
-        cand.update(int(k) for k in candidate_keys.tolist())
-        arr = np.fromiter(cand, dtype=np.uint64, count=len(cand))
+        heavy = np.fromiter(self.heavy, dtype=np.uint64, count=len(self.heavy))
+        arr = np.union1d(heavy, candidate_keys.astype(np.uint64, copy=False))
         est = self._estimate_keys(arr)
         order = np.lexsort((arr, -est))[: self.k_heavy]
         self.heavy = {
@@ -147,10 +146,9 @@ class CMS:
         self.table += other.table
         self.total += other.total
         if other.heavy or self.heavy:
-            cand = np.fromiter(
-                set(self.heavy) | set(other.heavy), dtype=np.uint64
+            self._refresh_heavy(
+                np.fromiter(other.heavy, dtype=np.uint64, count=len(other.heavy))
             )
-            self._refresh_heavy(cand)
         return self
 
     # ------------------------------------------------------------------ serde

@@ -64,9 +64,15 @@ def _export_protobuf_shim() -> None:
         sys.path.insert(0, shim)
     if not _has_pb():
         return  # SDK runtime absent: leave everything untouched
+    _export_pythonpath(shim)
+
+
+def _export_pythonpath(entry: str) -> None:
+    """Put `entry` first on the PYTHONPATH that JVM-launched python processes
+    inherit (once); must run before the JVM starts."""
     parts = os.environ.get("PYTHONPATH", "").split(os.pathsep)
-    if shim not in parts:
-        os.environ["PYTHONPATH"] = os.pathsep.join([shim] + [p for p in parts if p])
+    if entry not in parts:
+        os.environ["PYTHONPATH"] = os.pathsep.join([entry] + [p for p in parts if p])
 
 
 def get_spark(
@@ -75,8 +81,16 @@ def get_spark(
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
     """Session tuned for this engine: AQE on (runtime re-plan + skew join),
-    Arrow transfer on, sane shuffle parallelism for local mode."""
+    Arrow transfer on, sane shuffle parallelism for local mode.
+
+    Python workers fork from `tdigest_spark._daemon`, which imports pyspark
+    from its installed directory instead of Spark's pyspark/py4j zips: every
+    task calls `importlib.invalidate_caches()`, and each archive importer
+    re-reads its zip's central directory there (120-250 ms per task on
+    Python 3.11). The package's parent directory goes on the workers'
+    PYTHONPATH so the daemon module resolves from any driver cwd."""
     _export_protobuf_shim()
+    _export_pythonpath(str(Path(__file__).resolve().parents[2]))
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -106,5 +120,6 @@ def get_spark(
         # 128 GiB; on a real cluster executor memory is set per-node.
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "32g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "tdigest_spark._daemon")
         .getOrCreate()
     )

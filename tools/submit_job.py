@@ -20,6 +20,9 @@ import time
 def main() -> None:
     from pyspark.sql import SparkSession
 
+    # not get_spark: its daemon module (tdigest_spark._daemon) must be
+    # importable when the worker daemon starts, and a --py-files package is
+    # importable only after a task's setup_spark_files; keep Spark's default
     spark = SparkSession.builder.appName("sketch-submit").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
