@@ -83,14 +83,20 @@ def get_spark(
     """Session tuned for this engine: AQE on (runtime re-plan + skew join),
     Arrow transfer on, sane shuffle parallelism for local mode.
 
-    Python workers fork from `tdigest_spark._daemon`, which imports pyspark
-    from its installed directory instead of Spark's pyspark/py4j zips: every
-    task calls `importlib.invalidate_caches()`, and each archive importer
-    re-reads its zip's central directory there (120-250 ms per task on
-    Python 3.11). The package's parent directory goes on the workers'
-    PYTHONPATH so the daemon module resolves from any driver cwd."""
+    Every Python process the JVM launches (task daemon and workers, and the
+    Python Data Source planner workers for reads, writes, commits and the
+    streaming sink) inherits a PYTHONPATH that starts with
+    `tdigest_spark/_worker_site`, whose `sitecustomize` makes it import
+    pyspark from its installed directory instead of Spark's pyspark/py4j
+    zips: every task and planner call runs `importlib.invalidate_caches()`,
+    and each archive importer re-reads its zip's central directory there
+    (100-250 ms per call on Python 3.11). The package's parent directory
+    goes on that PYTHONPATH too, so workers import `tdigest_spark` from any
+    driver cwd. Both must be exported before the JVM starts."""
     _export_protobuf_shim()
-    _export_pythonpath(str(Path(__file__).resolve().parents[2]))
+    pkg = Path(__file__).resolve().parents[1]
+    _export_pythonpath(str(pkg.parent))
+    _export_pythonpath(str(pkg / "_worker_site"))
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -120,6 +126,5 @@ def get_spark(
         # 128 GiB; on a real cluster executor memory is set per-node.
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "32g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.python.daemon.module", "tdigest_spark._daemon")
         .getOrCreate()
     )

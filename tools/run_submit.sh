@@ -30,6 +30,8 @@ EOF
 )
 
 LOG=.cache/spark-submit.log
+# The workers' PYTHONPATH gets the interpreter-start hook (see
+# tools/submit_job.py), so tasks import pyspark from its directory.
 for CORES in 2 8; do
     echo "== spark-submit --master local[$CORES] ==" >&2
     # stderr goes to a log, not /dev/null: on failure the driver traceback
@@ -37,6 +39,7 @@ for CORES in 2 8; do
     if ! spark-submit --master "local[$CORES]" \
         --conf spark.ui.enabled=false \
         --conf spark.driver.memory=16g \
+        --conf spark.executorEnv.PYTHONPATH="$PWD/tdigest_spark/_worker_site" \
         --py-files "$ZIP" \
         tools/submit_job.py "$TABLE" 2>"$LOG"; then
         echo "spark-submit failed; last stderr lines:" >&2

@@ -20,9 +20,12 @@ import time
 def main() -> None:
     from pyspark.sql import SparkSession
 
-    # not get_spark: its daemon module (tdigest_spark._daemon) must be
-    # importable when the worker daemon starts, and a --py-files package is
-    # importable only after a task's setup_spark_files; keep Spark's default
+    # not get_spark: spark-submit has started the JVM already, so the
+    # PYTHONPATH get_spark exports reaches no worker, and a --py-files
+    # package is importable only after a task's setup_spark_files.
+    # run_submit.sh puts the workers' start-up hook (tdigest_spark/
+    # _worker_site, which keeps Spark's zips off their sys.path) on
+    # spark.executorEnv.PYTHONPATH instead.
     spark = SparkSession.builder.appName("sketch-submit").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
